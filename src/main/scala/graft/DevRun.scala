@@ -33,10 +33,6 @@ object DevRun {
         case "ingest_dsv2" =>
           spark.read.format("seamf").load(archiveDir)
             .write.format("noop").mode("overwrite").save()
-        case "ingest_dsv2_rows" =>
-          spark.read.format("seamf").option("columnar", "false")
-            .load(archiveDir)
-            .write.format("noop").mode("overwrite").save()
         case "stream_meta" | "stream_full" | "stream_meta_noprune" =>
           if (n == "stream_meta_noprune")
             spark.experimental.extraOptimizations =

@@ -463,9 +463,9 @@ object SeamfQueries {
         FROM sel GROUP BY 1, 2 ORDER BY 1, 2""")),
 
     // ---- §2.8: incremental seamf ingest -> windowed capture summary ----
-    // The landing dir streams through the SAME decode (SeamfStream), then a
-    // watermarked 1-minute window aggregates PVT peaks — the incremental
-    // formulation of s02. The oracle recomputes the windows batch-side from
+    // The landing dir streams through readStream.format("seamf")
+    // (SeamfStream.captureSummaryStream), then a watermarked 1-minute
+    // window aggregates PVT peaks — the incremental formulation of s02. The oracle recomputes the windows batch-side from
     // the decoded dump: streaming-vs-batch parity for the seamf pipeline
     // itself, not just the events fixture.
     "s15_seamf_stream_summary" -> QueryDef(

@@ -47,9 +47,16 @@ object SeamfCodec {
       data.getOrElse(throw new IllegalArgumentException("no .sigmf-data member")))
   }
 
+  /** Decoder memory cap in KiB: room for xz preset 9 (a 64 MiB
+    * dictionary), the largest the encoder presets use. A header declaring
+    * more fails the file with a `MemoryLimitException` before anything is
+    * allocated.
+    */
+  private val XzMemoryLimitKiB = 72 * 1024
+
   /** XZ-decompress (the dominant ingest cost, per seamf.py:1038-1040). */
   def xzDecompress(bytes: Array[Byte]): Array[Byte] = {
-    val in = new XZInputStream(new ByteArrayInputStream(bytes))
+    val in = new XZInputStream(new ByteArrayInputStream(bytes), XzMemoryLimitKiB)
     try in.readAllBytes() finally in.close()
   }
 
@@ -59,24 +66,6 @@ object SeamfCodec {
     val out = new XZOutputStream(bos, new LZMA2Options(preset))
     out.write(bytes); out.finish(); out.close()
     bos.toByteArray
-  }
-
-  /** Enumerate `.sigmf` members of a zip archive (reference
-    * `read_seamf_zipfile`, ziparchive.py:365-447; the central-directory
-    * caching machinery of MultiProcessingZipFile is unnecessary here — each
-    * zip is one executor task and is read once, streaming).
-    */
-  def unpackZip(bytes: Array[Byte]): Seq[(String, Array[Byte])] = {
-    val zin = new java.util.zip.ZipInputStream(new ByteArrayInputStream(bytes))
-    val out = Seq.newBuilder[(String, Array[Byte])]
-    var e = zin.getNextEntry
-    while (e != null) {
-      if (!e.isDirectory && e.getName.endsWith(".sigmf"))
-        out += ((e.getName, zin.readAllBytes()))
-      e = zin.getNextEntry
-    }
-    zin.close()
-    out.result()
   }
 
   /** Build a zip archive from (name, bytes) members (fixtures). */

@@ -74,67 +74,62 @@ object SeamfReader {
       channels: Seq[ChannelMetaRow],
       sweep: SweepMetaRow)
 
-  /** Decode one .sigmf file (all steps of SURVEY §3.1). */
+  /** Decode one .sigmf file (all steps of SURVEY §3.1). `sha512_ok` is
+    * always reported; `checkHash` only controls whether a mismatch is fatal
+    * (reference hash_check, seamf.py:1021-1024).
+    */
   def decodeFile(path: String, bytes: Array[Byte], tz: Option[String],
       decodePayload: Boolean, checkHash: Boolean): Decoded = {
-    val raw = SeamfCodec.unpackTar(bytes)
-    val meta = SeamfMetadata.parse(raw.metaJson, tz)
-    // always compute the integrity flag (cheap vs XZ decode); checkHash
-    // only controls whether a mismatch is fatal (reference hash_check,
-    // seamf.py:1021-1024) — permissive scans still report sha512_ok=false
-    val shaOk = SeamfCodec.checkSha512(meta, raw.compressedPayload)
-    if (checkHash && !shaOk)
-      throw new IllegalStateException(s"sha512 mismatch in $path")
+    decoded(SeamfDecode.decode(path, bytes, tz, TracePrune(), decodePayload,
+      checkHash))
+  }
 
-    val traces: Seq[TraceRow] =
-      if (!decodePayload) Nil
-      else {
-        val payload = HalfFloat.decodeVector(
-          SeamfCodec.xzDecompress(raw.compressedPayload))
-        // absolute offset table (handles the variable per-capture APD
-        // regions of generations 1-3; see SeamfMetadata class doc)
-        require(meta.requiredLength <= payload.length,
-          s"payload length ${payload.length} < offset table end ${meta.requiredLength}")
-        meta.slots.map { s =>
-          val cap = meta.captures(s.captureIdx)
-          val slice = java.util.Arrays.copyOfRange(
-            payload, s.start.toInt, s.start.toInt + s.length)
-          TraceRow(path, cap.datetimeUs, cap.frequency, s.table,
-            s.captureStatistic, s.detector, s.axisStart, s.axisStep, slice)
-        }
-      }
+  private def decoded(f: SeamfDecode.File): Decoded =
+    Decoded(traceRows(f), channelRows(f), sweepRow(f))
 
-    val channels = meta.captures.map { c =>
-      ChannelMetaRow(path, c.datetimeUs, c.frequency, c.overload, c.calGainDb,
+  private def traceRows(f: SeamfDecode.File): Seq[TraceRow] =
+    if (f.payload == null) Nil
+    else f.keep.indices.map { i =>
+      val s = f.keep(i)
+      val cap = f.meta.captures(s.captureIdx)
+      TraceRow(f.path, cap.datetimeUs, cap.frequency, s.table,
+        s.captureStatistic, s.detector, s.axisStart, s.axisStep, f.slice(i))
+    }
+
+  private def channelRows(f: SeamfDecode.File): Seq[ChannelMetaRow] =
+    f.meta.captures.map { c =>
+      ChannelMetaRow(f.path, c.datetimeUs, c.frequency, c.overload, c.calGainDb,
         c.calNoiseFigureDb, c.calTemperatureDegC, c.siganReferenceLevelDbm,
         c.siganAttenuationDb, c.siganPreampEnable, c.iqCaptureDurationMs)
     }
-    val sweep = SweepMetaRow(path, meta.version, meta.schemaGeneration,
-      meta.sampleRate, meta.numChannels, meta.task, meta.scheduleName,
-      meta.scheduleStartUs, meta.scheduleIntervalSec, meta.timezone, shaOk,
-      meta.captures.size, meta.maxOfMaxChannelPowers,
-      meta.medianOfMeanChannelPowers, meta.diagnostics)
-    Decoded(traces, channels, sweep)
+
+  private def sweepRow(f: SeamfDecode.File): SweepMetaRow = {
+    val m = f.meta
+    SweepMetaRow(f.path, m.version, m.schemaGeneration, m.sampleRate,
+      m.numChannels, m.task, m.scheduleName, m.scheduleStartUs,
+      m.scheduleIntervalSec, m.timezone, f.shaOk, m.captures.size,
+      m.maxOfMaxChannelPowers, m.medianOfMeanChannelPowers, m.diagnostics)
   }
 
-  /** Scan + decode a directory/glob of .sigmf files.
+  /** Scan + decode a directory/glob of .sigmf files in one fused
+    * scan -> decode -> project stage. The per-table projection happens
+    * INSIDE the single mapPartitions (no `Dataset[Decoded].flatMap` chain):
+    * a typed flatMap after a typed mapPartitions leaves an object-to-object
+    * ProjectExec in the plan, which crashes Spark's interpreted
+    * UnsafeProjection fallback (ObjectType is codegen-only).
     *
     * @param errors "raise" (fail the job on a bad file) or "log" (skip it,
     *               count it in the `seamf.failed_files` accumulator) —
     *               reference errors= semantics (ziparchive.py:381-440).
     * @param decodePayload false = metadata-only fast path (`read_seamf_meta`,
     *               seamf.py:1073-1103): the XZ payload is never touched.
-    */
-  /** One fused scan -> decode -> project stage. The per-table projection
-    * happens INSIDE the single mapPartitions (no `Dataset[Decoded].flatMap`
-    * chain): a typed flatMap after a typed mapPartitions leaves an
-    * object-to-object ProjectExec in the plan, which crashes Spark's
-    * interpreted UnsafeProjection fallback (ObjectType is codegen-only).
+    * @param counters decode-work counters for a pruned scan.
     */
   private def decodeAs[T: org.apache.spark.sql.Encoder](
       spark: SparkSession, path: String, tz: Option[String], errors: String,
-      decodePayload: Boolean, checkHash: Boolean)(
-      project: Decoded => IterableOnce[T]): Dataset[T] = {
+      decodePayload: Boolean, checkHash: Boolean,
+      prune: TracePrune = TracePrune(), counters: Option[PruneCounters] = None)(
+      project: SeamfDecode.File => IterableOnce[T]): Dataset[T] = {
     import spark.implicits._
     val failed: LongAccumulator = spark.sparkContext.longAccumulator("seamf.failed_files")
     val raise = errors == "raise"
@@ -148,9 +143,19 @@ object SeamfReader {
       .as[(String, Array[Byte])]
       .mapPartitions { it =>
         it.flatMap { case (p, bytes) =>
-          try project(decodeFile(p, bytes, tz, decodePayload, checkHash))
-          catch {
-            case e: Exception if !raise =>
+          try {
+            val f = SeamfDecode.decode(p, bytes, tz, prune, decodePayload,
+              checkHash)
+            counters.foreach { c =>
+              if (f.keep.isEmpty) c.prunedFiles.add(1)
+              else {
+                c.decodedFiles.add(1)
+                c.prunedTraces.add(f.meta.slots.size - f.keep.size)
+              }
+            }
+            project(f)
+          } catch {
+            case _: Exception if !raise =>
               failed.add(1)
               Iterator.empty
           }
@@ -213,59 +218,12 @@ object SeamfReader {
       tz: Option[String] = None, errors: String = "log")
       : (Dataset[TraceRow], PruneCounters) = {
     import spark.implicits._
-    val failed = spark.sparkContext.longAccumulator("seamf.failed_files")
     val counters = PruneCounters(
       spark.sparkContext.longAccumulator("seamf.pruned_files"),
       spark.sparkContext.longAccumulator("seamf.pruned_traces"),
       spark.sparkContext.longAccumulator("seamf.decoded_files"))
-    val raise = errors == "raise"
-    val paths = path.split(',').map(_.trim).filter(_.nonEmpty)
-    val ds = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.sigmf")
-      .load(paths.toIndexedSeq: _*)
-      .select("path", "content")
-      .as[(String, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (p, bytes) =>
-          try {
-            val raw = SeamfCodec.unpackTar(bytes)
-            val meta = SeamfMetadata.parse(raw.metaJson, tz)
-            val shaOk = SeamfCodec.checkSha512(meta, raw.compressedPayload)
-            if (!shaOk)
-              throw new IllegalStateException(s"sha512 mismatch in $p")
-            val keep = meta.slots.filter { s =>
-              val cap = meta.captures(s.captureIdx)
-              prune.matchesTable(s.table) &&
-                prune.matchesCapture(cap.datetimeUs, cap.frequency)
-            }
-            if (keep.isEmpty) {
-              counters.prunedFiles.add(1)
-              Iterator.empty
-            } else {
-              counters.decodedFiles.add(1)
-              counters.prunedTraces.add(meta.slots.size - keep.size)
-              val payload = HalfFloat.decodeVector(
-                SeamfCodec.xzDecompress(raw.compressedPayload))
-              require(meta.requiredLength <= payload.length,
-                s"payload length ${payload.length} < offset table end " +
-                  s"${meta.requiredLength}")
-              keep.iterator.map { s =>
-                val cap = meta.captures(s.captureIdx)
-                val slice = java.util.Arrays.copyOfRange(
-                  payload, s.start.toInt, s.start.toInt + s.length)
-                TraceRow(p, cap.datetimeUs, cap.frequency, s.table,
-                  s.captureStatistic, s.detector, s.axisStart, s.axisStep,
-                  slice)
-              }
-            }
-          } catch {
-            case _: Exception if !raise =>
-              failed.add(1)
-              Iterator.empty
-          }
-        }
-      }
-    (ds, counters)
+    (decodeAs[TraceRow](spark, path, tz, errors, decodePayload = true,
+      checkHash = true, prune, Some(counters))(traceRows), counters)
   }
 
   /** [[tracesPrunedCounted]] without the counters (query surface). */
@@ -322,8 +280,8 @@ object SeamfReader {
             try {
               val entry = zf.getEntry(member)
               val bytes = zf.getInputStream(entry).readAllBytes()
-              decodeFile(s"$zp!$member", bytes, tz,
-                decodePayload = true, checkHash = true).traces
+              traceRows(SeamfDecode.decode(s"$zp!$member", bytes, tz,
+                TracePrune(), wantPayload = true, checkHash = true))
             } catch {
               case _: Exception if !raise =>
                 failed.add(1)
@@ -341,21 +299,22 @@ object SeamfReader {
       errors: String = "log", decodePayload: Boolean = true,
       checkHash: Boolean = true): Dataset[Decoded] = {
     import spark.implicits._
-    decodeAs[Decoded](spark, path, tz, errors, decodePayload, checkHash)(Seq(_))
+    decodeAs[Decoded](spark, path, tz, errors, decodePayload, checkHash)(f =>
+      Seq(decoded(f)))
   }
 
   def traces(spark: SparkSession, path: String, tz: Option[String] = None,
       errors: String = "log"): Dataset[TraceRow] = {
     import spark.implicits._
     decodeAs[TraceRow](spark, path, tz, errors,
-      decodePayload = true, checkHash = true)(_.traces)
+      decodePayload = true, checkHash = true)(traceRows)
   }
 
   def channelMetadata(spark: SparkSession, path: String,
       tz: Option[String] = None, errors: String = "log"): DataFrame = {
     import spark.implicits._
     decodeAs[ChannelMetaRow](spark, path, tz, errors,
-        decodePayload = false, checkHash = true)(_.channels).toDF()
+        decodePayload = false, checkHash = true)(channelRows).toDF()
       .withColumn("datetime", timestamp_micros(col("datetime_us")))
   }
 
@@ -365,7 +324,7 @@ object SeamfReader {
       checkHash: Boolean = false): DataFrame = {
     import spark.implicits._
     decodeAs[SweepMetaRow](spark, path, tz, errors,
-      decodePayload = false, checkHash = checkHash)(d => Seq(d.sweep)).toDF()
+      decodePayload = false, checkHash = checkHash)(f => Seq(sweepRow(f))).toDF()
   }
 
   private def longify(tr: DataFrame, table: String): DataFrame = {

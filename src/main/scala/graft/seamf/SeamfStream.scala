@@ -1,73 +1,31 @@
 package graft.seamf
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-/** Streaming seamf ingest: the landing directory becomes a Structured
-  * Streaming file source, so the reference's 90-second file cadence
-  * (schedule.interval, SURVEY §2.8) is processed incrementally — each
-  * trigger decodes only newly arrived .sigmf files and appends to the
-  * long-format tables, replacing batch re-scans of the archive.
+/** Streaming seamf ingest: the landing directory is a
+  * `readStream.format("seamf")` source, so the reference's 90-second file
+  * cadence (schedule.interval, SURVEY §2.8) is processed incrementally —
+  * each trigger decodes only newly arrived .sigmf files, through the same
+  * decode kernel and split packing as a batch scan.
   *
-  * Scale notes: file-listing increments + stateless decode mean no
-  * streaming state at all for ingest; watermarked aggregates downstream
-  * (capture summaries) keep bounded state. Checkpointing the query gives
+  * Scale notes: file-arrival offsets + stateless decode mean no streaming
+  * state at all for ingest; watermarked aggregates downstream (capture
+  * summaries) keep bounded state. Checkpointing the query gives
   * exactly-once appends into the date-partitioned lake.
   */
 object SeamfStream {
 
-  /** binaryFile's fixed schema (streaming sources require it declared). */
-  val binaryFileSchema: StructType = StructType(Seq(
-    StructField("path", StringType),
-    StructField("modificationTime", TimestampType),
-    StructField("length", LongType),
-    StructField("content", BinaryType)))
-
-  /** Streaming scan of a landing dir. */
-  def landing(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.format("binaryFile")
-      .schema(binaryFileSchema)
-      .option("pathGlobFilter", "*.sigmf")
-      .load(dir)
-
-  /** Incremental decode -> trace rows (permissive: bad files are skipped). */
-  def traceStream(spark: SparkSession, dir: String,
-      tz: Option[String] = None): Dataset[SeamfReader.TraceRow] = {
-    import spark.implicits._
-    landing(spark, dir)
-      .select("path", "content").as[(String, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (p, bytes) =>
-          try SeamfReader.decodeFile(p, bytes, tz,
-            decodePayload = true, checkHash = true).traces
-          catch { case _: Exception => Iterator.empty }
-        }
-      }
-  }
-
-  /** Incremental metadata-only stream (one row per arriving file). */
-  def sweepStream(spark: SparkSession, dir: String,
-      tz: Option[String] = None): Dataset[SeamfReader.SweepMetaRow] = {
-    import spark.implicits._
-    landing(spark, dir)
-      .select("path", "content").as[(String, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (p, bytes) =>
-          try Iterator.single(SeamfReader.decodeFile(p, bytes, tz,
-            decodePayload = false, checkHash = true).sweep)
-          catch { case _: Exception => Iterator.empty }
-        }
-      }
-  }
-
   /** Watermarked per-channel capture-summary stream: the incremental
     * formulation of the batch capture_summary (A8) — max/mean PVT power per
-    * (1-minute window, frequency).
+    * (1-minute window, frequency). Bad files are skipped and counted (the
+    * source's `errors=log` and `checkHash=true` defaults).
     */
   def captureSummaryStream(spark: SparkSession, dir: String,
-      tz: Option[String] = None): DataFrame =
-    traceStream(spark, dir, tz).toDF()
+      tz: Option[String] = None): DataFrame = {
+    val reader = spark.readStream.format("seamf")
+    tz.foreach(reader.option("tz", _))
+    reader.load(dir)
       .filter(col("table") === "pvt")
       .withColumn("datetime", timestamp_micros(col("datetime_us")))
       .withWatermark("datetime", "10 minutes")
@@ -76,4 +34,5 @@ object SeamfStream {
         count(lit(1)).as("n_traces"))
       .select(col("window.start").as("minute"), col("frequency"),
         col("peak_dbm"), col("n_traces"))
+  }
 }

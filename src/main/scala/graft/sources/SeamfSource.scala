@@ -6,7 +6,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.NamedReference
@@ -18,14 +18,14 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.seamf.{HalfFloat, SeamfCodec, SeamfMetadata, SeamfReader}
+import graft.seamf.{SeamfDecode, SeamfMetadata, SeamfReader}
 
 /** DataSource V2 seamf trace source: `spark.read.format("seamf").load(dir)`.
   *
   * The `mapPartitions` ingest ([[graft.seamf.SeamfReader]]) is the library
-  * surface; this source puts the SAME decode on Spark's connector API so the
-  * optimizer — not the caller — decides how much of each archive member to
-  * decode:
+  * surface; this source puts the same decode kernel
+  * ([[graft.seamf.SeamfDecode]]) on Spark's connector API so the optimizer —
+  * not the caller — decides how much of each archive member to decode:
   *
   *   - '''Column pruning is decode pruning.''' The XZ payload exists only to
   *     fill the `trace` column; when a projection drops `trace`, Catalyst's
@@ -59,15 +59,13 @@ import graft.seamf.{HalfFloat, SeamfCodec, SeamfMetadata, SeamfReader}
   *     formula, so 2000 small sweeps do not become 2000 tasks (the
   *     reference's `partition_size` knob, ziparchive.py:260-263, derived
   *     from sizes instead of hand-tuned).
-  *   - '''Vectorized reads.''' The default read path emits one
-  *     `ColumnarBatch` per decoded file into reused `OnHeapColumnVector`s:
-  *     `trace` floats append straight from the decoded payload at each
-  *     slot's offset (no per-slot array copy, no per-row object), and the
-  *     row transition happens in whole-stage codegen's `ColumnarToRow` —
-  *     deleting the per-slot unsafe projection that made the row-based
-  *     connector ~29% slower than the fused `mapPartitions` ingest.
-  *     `columnar=false` forces the row reader (A/B); aggregate pushdown
-  *     always uses it (partial rows are few).
+  *   - '''Vectorized reads.''' Every scan without a pushed
+  *     aggregate emits one `ColumnarBatch` per decoded file into reused
+  *     `OnHeapColumnVector`s: `trace` floats append straight from the
+  *     decoded payload at each slot's offset (no per-slot array copy, no
+  *     per-row object), and the row transition happens in whole-stage
+  *     codegen's `ColumnarToRow`. Pushed aggregates read rows (partial rows
+  *     are few).
   *   - '''Observability via DSv2 custom metrics.''' skipped / metadata-
   *     pruned / decoded file counts surface as SQL metrics on the scan node
   *     (exactly-once per SQL metric semantics — stronger than the
@@ -755,9 +753,8 @@ private[graft] class SeamfScan(paths: Seq[String],
   override def createReaderFactory(): PartitionReaderFactory = {
     val conf = new SerializableHadoopConf(
       SparkSession.active.sessionState.newHadoopConf())
-    val columnar = Option(options.get("columnar")).forall(_.toBoolean)
     new SeamfReaderFactory(conf, pruneBox, required, tz, raise,
-      checkHash, needPayload, limit, pushedAgg, columnar)
+      checkHash, needPayload, limit, pushedAgg)
   }
 
 }
@@ -806,7 +803,7 @@ private[sources] object SeamfOffset {
   }
 }
 
-/** Entry byte fetch shared by the row and aggregate readers — everything
+/** Entry byte fetch shared by the columnar and aggregate readers — everything
   * goes through the Hadoop `FileSystem` API, so object stores work the
   * same as local disk. Members of the same zip are adjacent in a bin
   * (listing order), so one `FSDataInputStream` stays open across
@@ -895,26 +892,19 @@ private[graft] final class PruneBox(
 private[sources] class SeamfReaderFactory(conf: SerializableHadoopConf,
     pruneBox: PruneBox, required: StructType, tz: Option[String],
     raise: Boolean, checkHash: Boolean, needPayload: Boolean,
-    limit: Option[Int], pushedAgg: Option[(Seq[String], Seq[SeamfAgg])],
-    columnar: Boolean = true)
+    limit: Option[Int], pushedAgg: Option[(Seq[String], Seq[SeamfAgg])])
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val entries = partition.asInstanceOf[SeamfInputPartition].entries
-    pushedAgg match {
-      case Some((groups, funcs)) =>
-        new SeamfAggPartitionReader(entries, conf.value, pruneBox.value,
-          groups, funcs, tz, raise, checkHash)
-      case None =>
-        new SeamfPartitionReader(entries, conf.value, pruneBox.value,
-          required, tz, raise, checkHash, needPayload, limit)
-    }
-  }
-
-  // vectorized by default: an aggregate push emits few partial rows (the
-  // row reader is right there), everything else hands Spark whole column
-  // vectors and skips the per-slot unsafe projection
+  // an aggregate push emits a few partial rows; every other scan hands
+  // Spark whole column vectors
   override def supportColumnarReads(partition: InputPartition): Boolean =
-    columnar && pushedAgg.isEmpty
+    pushedAgg.isEmpty
+
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    val (groups, funcs) = pushedAgg.getOrElse(throw new IllegalStateException(
+      "seamf reads rows only under a pushed aggregation"))
+    new SeamfAggPartitionReader(partition.asInstanceOf[SeamfInputPartition].entries,
+      conf.value, pruneBox.value, groups, funcs, tz, raise, checkHash)
+  }
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val entries = partition.asInstanceOf[SeamfInputPartition].entries
@@ -946,25 +936,13 @@ private[sources] class SeamfAggPartitionReader(
 
   private def decodeNext(): Iterator[InternalRow] = {
     val (pathStr, bytes) = fetcher.fetch(entries(fileIdx))
-
-    val raw = SeamfCodec.unpackTar(bytes)
-    val meta = SeamfMetadata.parse(raw.metaJson, tz)
-    // digest only when verification is on (the SeamfFileDecode rule): on
-    // this metadata-only path the sha512 over the UNUSED compressed
-    // payload would otherwise be the dominant per-file cost
-    if (checkHash && !SeamfCodec.checkSha512(meta, raw.compressedPayload))
-      throw new IllegalStateException(s"sha512 mismatch in $pathStr")
-
-    val keep = meta.slots.filter { s =>
-      val cap = meta.captures(s.captureIdx)
-      prune.matchesTable(s.table) &&
-        prune.matchesCapture(cap.datetimeUs, cap.frequency)
-    }
-    if (keep.isEmpty) { nPruned += 1; return Iterator.empty }
+    val d = SeamfDecode.decode(pathStr, bytes, tz, prune, wantPayload = false,
+      checkHash)
+    if (d.keep.isEmpty) { nPruned += 1; return Iterator.empty }
     nMetaOnly += 1
 
     def colVal(slot: SeamfMetadata.TraceSlot, c: String): Any = {
-      val cap = meta.captures(slot.captureIdx)
+      val cap = d.meta.captures(slot.captureIdx)
       c match {
         case "file" => pathStr
         case "table" => slot.table
@@ -978,7 +956,7 @@ private[sources] class SeamfAggPartitionReader(
           throw new IllegalArgumentException(s"unsupported agg column $other")
       }
     }
-    keep.groupBy(s => groups.map(colVal(s, _))).iterator.map {
+    d.keep.groupBy(s => groups.map(colVal(s, _))).iterator.map {
       case (key, slots) =>
         val row = new GenericInternalRow(groups.length + funcs.length)
         key.zipWithIndex.foreach { case (v, i) =>
@@ -1027,153 +1005,19 @@ private[sources] class SeamfAggPartitionReader(
     SeamfTaskMetric("seamfSkippedFiles", nSkipped))
 }
 
-/** Decodes one packed bin of members; emits only the required columns.
-  * Decode order per member: tar unpack -> metadata parse -> sha512 flag ->
-  * metadata prune (skip payload if nothing survives) -> XZ decode only when
-  * the `trace` column is required -> per-slot row emit (SURVEY §3.1 steps
-  * 2-7 as one executor-side function).
-  */
-/** Shared per-file decode prelude for the row and columnar readers:
-  * fetch -> untar -> metadata parse -> sha512 check -> decode-prune the
-  * slot list -> (only if some slot survives AND the schema needs `trace`)
-  * XZ-inflate the payload. Returns None when every slot was pruned — the
-  * payload of a fully-pruned file is never decompressed.
-  */
-private[sources] object SeamfFileDecode {
-  final case class Decoded(path: String, meta: SeamfMetadata.SeamfMeta,
-      keep: Seq[SeamfMetadata.TraceSlot], payload: Array[Float])
-
-  def decode(fetcher: SeamfEntryFetcher, entry: SeamfScanEntry,
-      tz: Option[String], checkHash: Boolean,
-      prune: SeamfReader.TracePrune, needPayload: Boolean)
-      : Option[Decoded] = {
-    val (pathStr, bytes) = fetcher.fetch(entry)
-    val raw = SeamfCodec.unpackTar(bytes)
-    val meta = SeamfMetadata.parse(raw.metaJson, tz)
-    // digest only when verification is on: sha512 over the compressed
-    // payload is the third-largest per-file cost after XZ and the fetch
-    if (checkHash && !SeamfCodec.checkSha512(meta, raw.compressedPayload))
-      throw new IllegalStateException(s"sha512 mismatch in $pathStr")
-
-    val keep = meta.slots.filter { s =>
-      val cap = meta.captures(s.captureIdx)
-      prune.matchesTable(s.table) &&
-        prune.matchesCapture(cap.datetimeUs, cap.frequency)
-    }
-    if (keep.isEmpty) None
-    else {
-      val payload: Array[Float] =
-        if (!needPayload) null
-        else {
-          val p = HalfFloat.decodeVector(
-            SeamfCodec.xzDecompress(raw.compressedPayload))
-          require(meta.requiredLength <= p.length,
-            s"payload length ${p.length} < offset table end " +
-              meta.requiredLength)
-          p
-        }
-      Some(Decoded(pathStr, meta, keep, payload))
-    }
-  }
-}
-
-private[sources] class SeamfPartitionReader(
-    entries: Array[SeamfScanEntry],
-    conf: Configuration, prune: SeamfReader.TracePrune, required: StructType,
-    tz: Option[String], raise: Boolean, checkHash: Boolean,
-    needPayload: Boolean, limit: Option[Int])
-    extends PartitionReader[InternalRow] {
-
-  private var fileIdx = 0
-  private var emitted = 0L
-  private var rows: Iterator[InternalRow] = Iterator.empty
-  private var current: InternalRow = _
-  private var nDecoded = 0L
-  private var nMetaOnly = 0L
-  private var nPruned = 0L
-  private var nSkipped = 0L
-  private val fetcher = new SeamfEntryFetcher(conf)
-
-  private def decodeNext(): Iterator[InternalRow] = {
-    val d = SeamfFileDecode.decode(fetcher, entries(fileIdx), tz, checkHash,
-      prune, needPayload) match {
-      case None => nPruned += 1; return Iterator.empty
-      case Some(dd) =>
-        if (needPayload) nDecoded += 1 else nMetaOnly += 1
-        dd
-    }
-    val pathStr = d.path
-    val meta = d.meta
-    val payload = d.payload
-    d.keep.iterator.map { s =>
-      val cap = meta.captures(s.captureIdx)
-      val row = new GenericInternalRow(required.length)
-      var i = 0
-      while (i < required.length) {
-        row.update(i, required.fields(i).name match {
-          case "file" => UTF8String.fromString(pathStr)
-          case "datetime_us" => cap.datetimeUs
-          case "frequency" => cap.frequency
-          case "table" => UTF8String.fromString(s.table)
-          case "capture_statistic" => UTF8String.fromString(s.captureStatistic)
-          case "detector" => UTF8String.fromString(s.detector)
-          case "axis_start" => s.axisStart
-          case "axis_step" => s.axisStep
-          case "trace" => UnsafeArrayData.fromPrimitiveArray(
-            java.util.Arrays.copyOfRange(payload, s.start.toInt,
-              s.start.toInt + s.length))
-          case other => throw new IllegalArgumentException(
-            s"unknown required column $other")
-        })
-        i += 1
-      }
-      row: InternalRow
-    }
-  }
-
-  override def next(): Boolean = {
-    // pushed partial limit: this partition is done once it has emitted
-    // `limit` rows — remaining files in the bin are never opened
-    if (limit.exists(emitted >= _)) return false
-    while (!rows.hasNext && fileIdx < entries.length) {
-      rows =
-        try decodeNext()
-        catch {
-          case e: Exception if !raise => nSkipped += 1; Iterator.empty
-        }
-      fileIdx += 1
-    }
-    if (rows.hasNext) { current = rows.next(); emitted += 1; true }
-    else false
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = fetcher.close()
-
-  override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
-    SeamfTaskMetric("seamfDecodedFiles", nDecoded),
-    SeamfTaskMetric("seamfMetaOnlyFiles", nMetaOnly),
-    SeamfTaskMetric("seamfPrunedFiles", nPruned),
-    SeamfTaskMetric("seamfSkippedFiles", nSkipped))
-}
-
-/** Columnar read path (the default): one `ColumnarBatch` per decoded file,
-  * written append-style into reused `OnHeapColumnVector`s (the Parquet
-  * reader's pattern — allocate once, `reset()` per batch).
+/** The trace reader for every scan without a pushed aggregate: per packed
+  * bin, one `ColumnarBatch` per decoded file, written append-style into
+  * reused `OnHeapColumnVector`s (the Parquet reader's pattern — allocate
+  * once, `reset()` per batch). Emits only the required columns.
   *
-  * Why it exists: a DSv2 ROW reader pays an `InternalRow -> UnsafeRow`
-  * projection per slot above the scan; the r8 bench measured that as the
-  * connector's +29% overhead over the fused `mapPartitions` ingest. The
-  * columnar path hands Spark whole vectors instead — `trace` floats are
-  * appended DIRECTLY from the decoded payload at the slot's offset
-  * (`appendFloats(len, payload, start)`: no per-slot `copyOfRange`, no
-  * per-row array object), and the downstream `ColumnarToRow` transition is
-  * whole-stage-codegen'd. Decode order per column (not per row) also keeps
-  * the payload slice loop tight. Rows-vs-columnar is decided per scan by
-  * `SeamfReaderFactory.supportColumnarReads`: aggregate pushdown keeps the
-  * row reader (partial rows are few), and `columnar=false` forces rows for
-  * A/B measurement. Same decode, same metrics, same prune — parity is
-  * pinned against the row path and the library ingest in SeamfSourceSpec.
+  * A DSv2 ROW reader pays an `InternalRow -> UnsafeRow` projection per slot
+  * above the scan; the r8 bench measured that as +29% over the fused
+  * `mapPartitions` ingest. This reader hands Spark whole vectors instead —
+  * `trace` floats are appended DIRECTLY from the kernel's payload at the
+  * slot's offset (`appendFloats(len, payload, start)`: no per-slot
+  * `copyOfRange`, no per-row array object), and the downstream
+  * `ColumnarToRow` transition is whole-stage-codegen'd. Parity with the
+  * library ingest is pinned in SeamfSourceSpec.
   */
 private[sources] class SeamfColumnarPartitionReader(
     entries: Array[SeamfScanEntry],
@@ -1197,7 +1041,7 @@ private[sources] class SeamfColumnarPartitionReader(
   private var batch: ColumnarBatch = _
   private var ready = false
 
-  private def buildBatch(d: SeamfFileDecode.Decoded): Unit = {
+  private def buildBatch(d: SeamfDecode.File): Unit = {
     val n = d.keep.length
     if (vectors == null) {
       vectors = OnHeapColumnVector.allocateColumns(n, required)
@@ -1205,6 +1049,12 @@ private[sources] class SeamfColumnarPartitionReader(
         vectors.map(v => v: ColumnVector).toArray[ColumnVector])
     } else vectors.foreach(_.reset())
     val pathBytes = d.path.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    def appendStrings(v: OnHeapColumnVector,
+        f: SeamfMetadata.TraceSlot => String): Unit =
+      d.keep.foreach { s =>
+        val b = f(s).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        v.appendByteArray(b, 0, b.length)
+      }
     var ci = 0
     while (ci < required.length) {
       val v = vectors(ci)
@@ -1216,28 +1066,18 @@ private[sources] class SeamfColumnarPartitionReader(
           d.keep.foreach(s => v.appendLong(d.meta.captures(s.captureIdx).datetimeUs))
         case "frequency" =>
           d.keep.foreach(s => v.appendDouble(d.meta.captures(s.captureIdx).frequency))
-        case "table" =>
-          d.keep.foreach { s =>
-            val b = s.table.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            v.appendByteArray(b, 0, b.length)
-          }
-        case "capture_statistic" =>
-          d.keep.foreach { s =>
-            val b = s.captureStatistic.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            v.appendByteArray(b, 0, b.length)
-          }
-        case "detector" =>
-          d.keep.foreach { s =>
-            val b = s.detector.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            v.appendByteArray(b, 0, b.length)
-          }
+        case "table" => appendStrings(v, _.table)
+        case "capture_statistic" => appendStrings(v, _.captureStatistic)
+        case "detector" => appendStrings(v, _.detector)
         case "axis_start" => d.keep.foreach(s => v.appendDouble(s.axisStart))
         case "axis_step" => d.keep.foreach(s => v.appendDouble(s.axisStep))
         case "trace" =>
-          d.keep.foreach { s =>
+          var i = 0
+          while (i < n) {
             // appendArray records the child offset BEFORE the elements land
-            v.appendArray(s.length)
-            v.arrayData().appendFloats(s.length, d.payload, s.start.toInt)
+            v.appendArray(d.keep(i).length)
+            v.arrayData().appendFloats(d.keep(i).length, d.payload, d.offsets(i))
+            i += 1
           }
         case other => throw new IllegalArgumentException(
           s"unknown required column $other")
@@ -1252,13 +1092,14 @@ private[sources] class SeamfColumnarPartitionReader(
     ready = false
     while (!ready && fileIdx < entries.length) {
       try {
-        SeamfFileDecode.decode(fetcher, entries(fileIdx), tz, checkHash,
-            prune, needPayload) match {
-          case None => nPruned += 1
-          case Some(d) =>
-            if (needPayload) nDecoded += 1 else nMetaOnly += 1
-            buildBatch(d)
-            ready = true
+        val (pathStr, bytes) = fetcher.fetch(entries(fileIdx))
+        val d = SeamfDecode.decode(pathStr, bytes, tz, prune, needPayload,
+          checkHash)
+        if (d.keep.isEmpty) nPruned += 1
+        else {
+          if (needPayload) nDecoded += 1 else nMetaOnly += 1
+          buildBatch(d)
+          ready = true
         }
       } catch {
         case e: Exception if !raise => nSkipped += 1

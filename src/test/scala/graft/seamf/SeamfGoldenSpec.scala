@@ -1,5 +1,6 @@
 package graft.seamf
 
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -19,6 +20,16 @@ class SeamfGoldenSpec extends SparkSpec {
   private val goldenDir = "/root/reference/demos/data"
   private def golden(v: Int): String = s"$goldenDir/example_v$v.sigmf"
 
+  /** The real files are not vendored: where they are absent every test
+    * reports canceled (not passed), naming the path, and re-arms as soon as
+    * the files exist.
+    */
+  private def goldenTest(name: String)(body: => Any): Unit =
+    test(name) {
+      assume(Files.isDirectory(Paths.get(goldenDir)), s"$goldenDir absent")
+      body
+    }
+
   private def decodeOne(v: Int, tz: Option[String] = None): SeamfReader.Decoded = {
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(golden(v)))
     SeamfReader.decodeFile(golden(v), bytes, tz, decodePayload = true,
@@ -34,7 +45,7 @@ class SeamfGoldenSpec extends SparkSpec {
     5 -> ((17, 187, 3.545e9, 1687794254137000L)),
     6 -> ((17, 187, 3.545e9, 1694973546672000L)))
 
-  test("all six golden files decode with sha512 ok and correct dispatch") {
+  goldenTest("all six golden files decode with sha512 ok and correct dispatch") {
     for (v <- 1 to 6) {
       val d = decodeOne(v, tz = if (v <= 3) Some("America/New_York") else None)
       val (nCaps, _, freq0, dt0) = expected(v)
@@ -48,14 +59,14 @@ class SeamfGoldenSpec extends SparkSpec {
     }
   }
 
-  test("v1-v3 require an explicit timezone; v4+ infer Denver from geolocation") {
+  goldenTest("v1-v3 require an explicit timezone; v4+ infer Denver from geolocation") {
     for (v <- 1 to 3)
       intercept[IllegalArgumentException] { decodeOne(v) } // ValueError parity
     for (v <- 4 to 6)
       assert(decodeOne(v).sweep.timezone === Some("America/Denver"), s"v$v tz")
   }
 
-  test("per-version trace tables, lengths, and normalized labels") {
+  goldenTest("per-version trace tables, lengths, and normalized labels") {
     for (v <- 1 to 6) {
       val d = decodeOne(v, tz = if (v <= 3) Some("UTC") else None)
       val (nCaps, nTabular, _, _) = expected(v)
@@ -88,7 +99,7 @@ class SeamfGoldenSpec extends SparkSpec {
     }
   }
 
-  test("unified baseband PSD axis and time axes across generations") {
+  goldenTest("unified baseband PSD axis and time axes across generations") {
     for (v <- 1 to 6) {
       val d = decodeOne(v, tz = if (v <= 3) Some("UTC") else None)
       val psd = d.traces.find(_.table == "psd").get
@@ -106,7 +117,7 @@ class SeamfGoldenSpec extends SparkSpec {
     }
   }
 
-  test("pinned first-capture PSD max-trace values (half->float widening)") {
+  goldenTest("pinned first-capture PSD max-trace values (half->float widening)") {
     val pins = Map(
       1 -> Seq(-159.875f, -159.625f, -159.875f),
       2 -> Seq(-161.5f, -159.625f, -159.75f),
@@ -124,7 +135,7 @@ class SeamfGoldenSpec extends SparkSpec {
     }
   }
 
-  test("declared max_of_max_channel_powers equals max over decoded peak PVT " +
+  goldenTest("declared max_of_max_channel_powers equals max over decoded peak PVT " +
     "traces (v4+, external end-to-end anchor)") {
     for (v <- 4 to 6) {
       val d = decodeOne(v)
@@ -142,7 +153,7 @@ class SeamfGoldenSpec extends SparkSpec {
     }
   }
 
-  test("golden files read end-to-end through the Spark reader") {
+  goldenTest("golden files read end-to-end through the Spark reader") {
     val tr = SeamfReader.traces(spark, goldenDir, tz = Some("UTC"))
     // v1-v3 decode with the explicit tz; v4+ would too (explicit wins)
     assert(tr.count() === (150 + 150 + 150 + 165 + 187 + 187) +

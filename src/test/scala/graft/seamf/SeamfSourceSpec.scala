@@ -441,21 +441,20 @@ class SeamfSourceSpec extends SparkSpec {
     assert(streamed === batch)
   }
 
-  test("columnar read path: the scan is vectorized by default, row-for-row " +
-      "equal to columnar=false, and aggregate pushdown stays row-based") {
+  test("columnar read path: the scan is vectorized, row-for-row equal to " +
+      "SeamfReader.traces, and aggregate pushdown stays row-based") {
     // the executed plan reads through ColumnarToRow — the scan itself is
     // vectorized (no per-slot unsafe projection)
     val df = dsv2.filter(col("table") === "psd")
     df.collect()
     val scan = runAndScan(df)
     assert(scan.supportsColumnar, "seamf scan should read columnar")
-    // A/B: identical rows with the row reader forced
-    val rowDf = spark.read.format("seamf").option("columnar", "false")
-      .load(fixture).filter(col("table") === "psd")
-    assert(!runAndScan(rowDf).supportsColumnar)
+    // identical rows to the library ingest
+    val libDf = SeamfReader.traces(spark, fixture).toDF()
+      .filter(col("table") === "psd")
     val a = canon(df).orderBy("file", "datetime_us", "table",
       "capture_statistic", "detector").collect().toSeq
-    val b = canon(rowDf).orderBy("file", "datetime_us", "table",
+    val b = canon(libDf).orderBy("file", "datetime_us", "table",
       "capture_statistic", "detector").collect().toSeq
     assert(a === b)
     // pushed aggregations emit a handful of partial rows — row reader

@@ -11,7 +11,9 @@ class SeamfStreamSpec extends SparkSpec {
     (0 until 3).foreach(i => SeamfFixtures.writeSweep(Paths.get(dir), i,
       t0 + i * 90L * 1000000L, nChannels = 2))
 
-    val q = SeamfStream.sweepStream(spark, dir).toDF()
+    // one row per arriving file
+    val q = spark.readStream.format("seamf").load(dir)
+      .select("file").dropDuplicates("file")
       .writeStream.format("memory").queryName("sweeps_stream").start()
     q.processAllAvailable()
     assert(spark.table("sweeps_stream").count() === 3)
@@ -32,7 +34,7 @@ class SeamfStreamSpec extends SparkSpec {
     val out = Files.createTempDirectory("graft_stream_lake_out").toString
     val ckpt = Files.createTempDirectory("graft_stream_ckpt").toString
 
-    val q = SeamfStream.traceStream(spark, dir).toDF()
+    val q = spark.readStream.format("seamf").load(dir)
       .withColumn("date", org.apache.spark.sql.functions.to_date(
         org.apache.spark.sql.functions.timestamp_micros(
           org.apache.spark.sql.functions.col("datetime_us"))))

@@ -356,11 +356,8 @@ object Bench {
     def streamOnce(name: String, full: Boolean,
         dir: String = graft.seamf.SeamfFixtures.sharedBenchArchive())
         : Double = {
-      if (!spark.experimental.extraOptimizations
-          .contains(graft.sources.SeamfStreamingPrune))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+
-            graft.sources.SeamfStreamingPrune
+      graft.plans.GraftExtensions.installRule(spark,
+        graft.sources.SeamfStreamingPrune)
       import org.apache.spark.sql.functions._
       mx.reset()
       val t0 = System.nanoTime()
@@ -399,20 +396,11 @@ object Bench {
     // adjacent query timings. Conversely, drop any leftover cached blocks
     // before the archive metrics so the heavy queries don't pollute THEM.
     def settle(): Unit = { spark.catalog.clearCache(); System.gc() }
-    // dedup/window/BPE operators persist intermediates; release them after
-    // EVERY run — between the min-of-2 runs too, or the second run would
-    // silently reuse the first run's cached blocks via CacheManager
-    // plan-matching and report a warm-cache number (ADVICE r1 + r3 #9)
-    def releaseCaches(): Unit = {
-      graft.operators.Dedup.unpersistAll()
-      graft.operators.Multimodal.unpersistAll()
-      graft.operators.Windowed.unpersistAll()
-      graft.operators.Bpe.unpersistAll()
-      graft.operators.KMeans.unpersistAll()
-      graft.operators.CurationFunnel.unpersistAll()
-      graft.operators.SemDedup.unpersistAll()
-      graft.operators.LogReg.unpersistAll()
-    }
+    // operators persist intermediates; release them all after EVERY run —
+    // between the min-of-2 runs too, or the second run would silently
+    // reuse the first run's cached blocks via CacheManager plan-matching
+    // and report a warm-cache number (ADVICE r1 + r3 #9)
+    def releaseCaches(): Unit = graft.operators.PersistRegistry.releaseAll()
     // variance guard (VERDICT r4 #3): fast queries report the MEDIAN of 3
     // cold-cache runs (first run still pays codegen, so the median lands
     // on a steady-state number without min-of-N's optimistic bias);

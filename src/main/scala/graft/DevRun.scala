@@ -38,11 +38,8 @@ object DevRun {
             spark.experimental.extraOptimizations =
               spark.experimental.extraOptimizations
                 .filterNot(_ == graft.sources.SeamfStreamingPrune)
-          else if (!spark.experimental.extraOptimizations
-              .contains(graft.sources.SeamfStreamingPrune))
-            spark.experimental.extraOptimizations =
-              spark.experimental.extraOptimizations :+
-                graft.sources.SeamfStreamingPrune
+          else graft.plans.GraftExtensions.installRule(spark,
+            graft.sources.SeamfStreamingPrune)
           import org.apache.spark.sql.functions._
           val src = spark.readStream.format("seamf").load(archiveDir)
           val agg =
@@ -63,13 +60,7 @@ object DevRun {
             .write.format("noop").mode("overwrite").save()
       }
       println(f"$n%-30s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      graft.operators.Dedup.unpersistAll()
-      graft.operators.Windowed.unpersistAll()
-      graft.operators.Bpe.unpersistAll()
-      graft.operators.KMeans.unpersistAll()
-      graft.operators.CurationFunnel.unpersistAll()
-      graft.operators.SemDedup.unpersistAll()
-      graft.operators.LogReg.unpersistAll()
+      graft.operators.PersistRegistry.releaseAll()
     }
     spark.stop()
   }

@@ -288,13 +288,7 @@ object ScaleBench {
     buildScaled(spark, srcDir, bigDir)
 
     def releaseCaches(): Unit = {
-      graft.operators.Dedup.unpersistAll()
-      graft.operators.Windowed.unpersistAll()
-      graft.operators.Bpe.unpersistAll()
-      graft.operators.KMeans.unpersistAll()
-      graft.operators.CurationFunnel.unpersistAll()
-      graft.operators.SemDedup.unpersistAll()
-      graft.operators.LogReg.unpersistAll()
+      graft.operators.PersistRegistry.releaseAll()
       spark.catalog.clearCache()
     }
     def runOnce(name: String, dir: String): Double = {
@@ -612,10 +606,7 @@ object ScaleBench {
             case e: Throwable =>
               System.err.println(s"[scale] landmark_resample_pairs @ $dir failed: ${e.getMessage}")
               -1.0
-          } finally {
-            graft.operators.Multimodal.unpersistAll()
-            releaseCaches()
-          }
+          } finally releaseCaches()
         }
         val landmarkResampleRow =
           if (!customOn("landmark_resample_pairs")) Seq.empty else {

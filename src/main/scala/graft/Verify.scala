@@ -30,16 +30,7 @@ object Verify {
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
-        finally {
-          graft.operators.Dedup.unpersistAll()
-          graft.operators.Multimodal.unpersistAll()
-          graft.operators.Windowed.unpersistAll()
-          graft.operators.Bpe.unpersistAll()
-          graft.operators.KMeans.unpersistAll()
-          graft.operators.CurationFunnel.unpersistAll()
-      graft.operators.SemDedup.unpersistAll()
-      graft.operators.LogReg.unpersistAll()
-        }
+        finally graft.operators.PersistRegistry.releaseAll()
       }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -31,9 +31,6 @@ object DbMath {
     */
   def dbMean(c: Column): Column = powToDb(avg(dbToPow(c)))
 
-  /** Sum in linear power space, expressed back in dB (reference `dbsum`). */
-  def dbSum(c: Column): Column = powToDb(sum(dbToPow(c)))
-
   /** Thermal (kTB) noise floor in dBm/Hz for a temperature in Celsius plus a
     * noise figure in dB (reference `demos/seamf_quickplot.ipynb` cell 5):
     * 10*log10((T_degC + 273.15) * k_B) + 30 + NF.

@@ -98,11 +98,6 @@ object TextOps {
       greatest(size(ws), lit(1)).cast("double")
   }
 
-  /** Mean token length in characters. */
-  def meanWordLen(text: Column): Column =
-    aggregate(words(text), lit(0.0), (acc, w) => acc + length(w).cast("double")) /
-      greatest(size(words(text)), lit(1)).cast("double")
-
   /** Composite [0,1] quality score from simple heuristics: long-enough docs
     * with moderate punctuation and some stopwords score high. The exact
     * weights are arbitrary but deterministic.

@@ -4,17 +4,13 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Timestamp handling mirroring the reference's util surface:
-  * ISO-8601 parse (F3, util.py:6-20), whole-table timezone localization
-  * (F4, `localize_timestamps`, util.py:63-83), tz-from-longitude (F5,
-  * seamf.py:38-46), and strftime partition naming (F9, dask_processing
-  * cell 8). Canonical storage is UTC TimestampType; localization is a
-  * display-layer projection (`from_utc_timestamp`), not a storage rewrite.
+  * whole-table timezone localization (F4, `localize_timestamps`,
+  * util.py:63-83), tz-from-longitude (F5, seamf.py:38-46), and calendar
+  * blocks for export partitioning (S12). Canonical storage is UTC
+  * TimestampType; localization is a display-layer projection
+  * (`from_utc_timestamp`), not a storage rewrite.
   */
 object TimeOps {
-
-  /** ISO-8601 string (trailing Z) -> TimestampType (UTC session). */
-  def isoToTimestamp(c: Column): Column =
-    to_timestamp(regexp_replace(c, "Z$", "+00:00"))
 
   /** Localize every TimestampType column of `df` to `tz` (reference
     * `localize_timestamps`). Column set preserved; localized columns get
@@ -38,11 +34,6 @@ object TimeOps {
       .when(lng >= -102.0 && lng < -87.0, "America/Chicago")
       .when(lng >= -87.0 && lng < -65.0, "America/New_York")
       .otherwise(lit(null).cast("string"))
-
-  /** strftime-style partition label (F9: `strftime("%Y-%m-%d.feather")`
-    * becomes a partition column, not a filename).
-    */
-  def datePartitionLabel(ts: Column): Column = date_format(ts, "yyyy-MM-dd")
 
   /** Calendar-block label for export partitioning (reference monthly/weekly
     * repartition, S12): "month" -> yyyy-MM, "week" -> ISO year-week.

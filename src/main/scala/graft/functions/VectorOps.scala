@@ -36,11 +36,6 @@ object VectorOps {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (l2Norm(a) * l2Norm(b))
 
-  /** Squared Euclidean distance. */
-  def l2DistanceSq(a: Column, b: Column): Column =
-    aggregate(zip_with(d(a), d(b), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x)
-
   /** Deterministic pseudo-random hyperplane for random-hyperplane LSH:
     * value for (seed, dim i) = (md5_48("seed:i") mod 1e6)/1e6 - 0.5, i.e.
     * uniform in [-0.5, 0.5). Computed DRIVER-SIDE and embedded as an array

@@ -24,7 +24,7 @@ import graft.functions.TextOps
   * deterministic and relational, so q70's DuckDB oracle replays the whole
   * multi-round fit as a CTE chain.
   */
-object Bpe {
+object Bpe extends PersistRegistry {
 
   /** Space-joined character sequence of a word: "hello" -> "h e l l o". */
   def charSeq(word: Column): Column =
@@ -89,20 +89,6 @@ object Bpe {
     * (round, pair, pair_count, total_symbols_after) — round 0 carries the
     * initial symbol total with pair "<base>".
     */
-  // persisted final generations handed out by fitWithSeqs whose owners
-  // defer release to the harness (same contract as Dedup/Windowed caches)
-  private val cachedFrames =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  /** Defer a fitWithSeqs result's release to [[unpersistAll]]. */
-  def track(df: DataFrame): Unit = cachedFrames.add(df)
-
-  /** Release every tracked fitWithSeqs result. */
-  def unpersistAll(): Unit = {
-    var df = cachedFrames.poll()
-    while (df != null) { df.unpersist(blocking = false); df = cachedFrames.poll() }
-  }
-
   def fit(words: DataFrame, rounds: Int): Seq[(Int, String, Long, Long)] = {
     // stats-only call: release the final table only if the fit persisted
     // it (zero-merge fits return the caller's input — possibly the

@@ -26,7 +26,7 @@ import graft.functions.TextOps
   * Jaccard -> connected-components canonicalization, same hash split), so
   * q97's oracle SQL grades this operator row-for-row.
   */
-object CurationFunnel {
+object CurationFunnel extends PersistRegistry {
 
   /** Five (stage, n_docs) rows from one conditional aggregation.
     *
@@ -95,23 +95,5 @@ object CurationFunnel {
         .as("s"))
       .select(col("s.stage").as("stage"), col("s.n_docs").as("n_docs"))
       .orderBy("stage")
-  }
-
-  // Persisted flags frames, released via [[unpersistAll]] (same contract
-  // as Dedup/Windowed/Bpe — the returned plan reads the cache lazily, so
-  // release happens after the caller materializes, not inside metrics()).
-  private val cachedFrames =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  private def cached(df: DataFrame): DataFrame = {
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cachedFrames.add(df)
-    df
-  }
-
-  /** Release every flags frame persisted by [[metrics]] in this JVM. */
-  def unpersistAll(): Unit = {
-    var df = cachedFrames.poll()
-    while (df != null) { df.unpersist(blocking = false); df = cachedFrames.poll() }
   }
 }

@@ -16,24 +16,7 @@ import graft.functions.TextOps
   * Everything is hash-deterministic (xxhash64 with fixed seeds via literal
   * prefixes) so results are reproducible across runs and cluster sizes.
   */
-object Dedup {
-  // Persisted intermediates (LSH banding tables etc.) registered here so
-  // long-lived sessions can release them: callers run [[unpersistAll]] once
-  // results are materialized (ADVICE r1 — persists used to accumulate until
-  // LRU eviction).
-  private val cachedFrames = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  private[graft] def cached(df: DataFrame): DataFrame = {
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cachedFrames.add(df)
-    df
-  }
-
-  /** Release every intermediate persisted by dedup operators in this JVM. */
-  def unpersistAll(): Unit = {
-    var df = cachedFrames.poll()
-    while (df != null) { df.unpersist(blocking = false); df = cachedFrames.poll() }
-  }
+object Dedup extends PersistRegistry {
   /** Exact duplicate groups by normalized-text fingerprint.
     * Output: fingerprint, n_dups, doc_ids (sorted) for groups with >1 doc.
     */
@@ -265,8 +248,8 @@ object Dedup {
     }.toDF("id_a", "id_b", "cosine")
   }
 
-  /** splitmix64 finalizer — deterministic per-index 64-bit constants for the
-    * XOR min-hash family.
+  /** splitmix64 finalizer — deterministic per-index 64-bit constants for
+    * the min-hash coefficients.
     */
   private def splitmix64(seed: Long): Long = {
     var z = seed + 0x9e3779b97f4a7c15L
@@ -304,22 +287,6 @@ object Dedup {
       val b = (splitmix64(2L * i + 1) & Long.MaxValue) % MinHashP
       (a, b)
     }
-
-  /** MinHash signature from a pre-hashed `array<long>` shingle column: hash
-    * function i is `h XOR c_i` (XOR with a fixed constant is a bijection of
-    * the 64-bit key space, so each is a valid min-wise permutation). The
-    * base xxhash64 of each shingle is computed ONCE; the per-function work
-    * is a single long XOR — 64 signature functions cost 64 array passes of
-    * long ops, not 64 string hashings.
-    */
-  def minHashSignatureFromHashes(shingleHashes: Column, numHashes: Int): Column =
-    array((0 until numHashes).map { i =>
-      array_min(transform(shingleHashes, h => h.bitwiseXOR(lit(splitmix64(i.toLong)))))
-    }: _*)
-
-  /** MinHash signature from a shingle-string set (convenience). */
-  def minHashSignature(shingleSet: Column, numHashes: Int): Column =
-    minHashSignatureFromHashes(transform(shingleSet, s => xxhash64(s)), numHashes)
 
   /** MinHash + LSH banding candidate pairs.
     *
@@ -567,26 +534,6 @@ object Dedup {
     untouched.unionByName(relabeled)
   }
 
-  /** 64-bit SimHash from a pre-computed `array<long>` of token hashes:
-    * per-bit majority vote (ties -> 0). Shifts are Scala-literal so the whole
-    * thing is a pure codegen'd expression tree (no UDF, no shuffle).
-    */
-  def simHashFromHashes(hashes: Column): Column =
-    (0 until 64).map { b =>
-      val mask = lit(1L << b)
-      val votes = aggregate(hashes, lit(0), (acc, h) =>
-        acc + when(h.bitwiseAND(mask) =!= 0L, 1).otherwise(-1))
-      when(votes > 0, mask).otherwise(lit(0L))
-    }.reduce(_.bitwiseOR(_))
-
-  /** 64-bit SimHash over whitespace tokens of a text column. */
-  def simHash(textCol: Column): Column =
-    simHashFromHashes(transform(TextOps.words(textCol), w => xxhash64(w)))
-
-  /** SimHash near-dup candidates: band the 64-bit simhash into 4 x 16-bit
-    * chunks (any chunk equality -> candidate, guaranteeing recall for
-    * Hamming distance <= 3), then verify with exact Hamming distance.
-    */
   /** Skew guard shared by the LSH variants: drop buckets larger than
     * `maxBucket` members per band. Oversized buckets are non-discriminative
     * (they pair near-everything with near-everything) and are the quadratic
@@ -610,6 +557,10 @@ object Dedup {
     banded.join(broadcast(over), Seq("band", bucketCol), "left_anti")
   }
 
+  /** SimHash near-dup candidates: band the 64-bit simhash into 4 x 16-bit
+    * chunks (any chunk equality -> candidate, guaranteeing recall for
+    * Hamming distance <= 3), then verify with exact Hamming distance.
+    */
   def simHashCandidates(docs: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, maxBucket: Int = 200): DataFrame = {
     // Bit votes via explode + 60 codegen'd SUM aggregates (same rationale as

@@ -44,21 +44,8 @@ import org.apache.spark.sql.types.DecimalType
   * materialization cost — by default at iters >= 4. Release with
   * [[unpersistAll]].
   */
-object KMeans {
+object KMeans extends PersistRegistry {
   private val Dec = DecimalType(24, 15)
-
-  // persisted exploded-points frames from fit(); released via
-  // [[unpersistAll]] (same ownership contract as Dedup/Windowed)
-  private val cachedFrames =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  /** Release every exploded-points frame persisted by [[fit]]. */
-  def unpersistAll(): Unit = {
-    var df = cachedFrames.poll()
-    while (df != null) {
-      df.unpersist(blocking = false); df = cachedFrames.poll()
-    }
-  }
 
   /** Long-format view of a vector column: (id, dim [1-based], x double). */
   def explodeVec(df: DataFrame, idCol: String, vecCol: String): DataFrame =
@@ -158,11 +145,7 @@ object KMeans {
     val pts = {
       val base = df.select(col(idCol).as("id"),
         col(vecCol).cast("array<double>").as("v"))
-      if (doPersist) {
-        val p = base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        cachedFrames.add(p)
-        p
-      } else base
+      if (doPersist) cached(base) else base
     }
     var centroids = centroidsWide(seedCentroids(df, idCol, vecCol, k))
     var assignment = assign(distancesWide(pts, centroids))

@@ -41,22 +41,11 @@ import org.apache.spark.sql.types.DecimalType
   * Nothing driver-side, nothing quadratic, no explode — feature count k
   * bounds every non-scan cost.
   */
-object LogReg {
+object LogReg extends PersistRegistry {
   private val Dec = DecimalType(38, 18)
 
   /** Weight grid: 1e-6 resolution (floor(w * 1e6) longs). */
   val Scale = 1000000L
-
-  private val cachedFrames =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  /** Release every feature frame persisted by [[train]]/[[trainTrajectory]]. */
-  def unpersistAll(): Unit = {
-    var df = cachedFrames.poll()
-    while (df != null) {
-      df.unpersist(blocking = false); df = cachedFrames.poll()
-    }
-  }
 
   /** Linear score z = sum_j (wq_j / 1e6) * x_j with the weight columns in
     * scope — built in fixed left-associated order so the double arithmetic
@@ -106,8 +95,7 @@ object LogReg {
   def train(features: DataFrame, xCols: Seq[String], yCol: String,
       lr: Double, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val f = features.persist()
-    cachedFrames.add(f)
+    val f = cached(features)
     val w0 = f.sparkSession.range(1)
       .select(xCols.indices.map(j => lit(0L).as(s"wq_$j")): _*)
     (1 to iters).foldLeft(w0)((w, _) => step(f, w, xCols, yCol, lr))
@@ -135,8 +123,7 @@ object LogReg {
   def weightTrajectoryWide(features: DataFrame, xCols: Seq[String],
       yCol: String, lr: Double, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val f = features.persist()
-    cachedFrames.add(f)
+    val f = cached(features)
     val w0 = f.sparkSession.range(1)
       .select(xCols.indices.map(j => lit(0L).as(s"w0q_$j")): _*)
     val wide = (1 to iters).foldLeft(w0) { (cum, t) =>

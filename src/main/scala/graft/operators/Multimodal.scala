@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * can replay feature values exactly without any codec — the correctness
   * gate then checks the full encode -> decode -> featurize round trip.
   */
-object Multimodal {
+object Multimodal extends PersistRegistry {
   // javax.imageio defaults to a disk-backed stream cache; these pipelines
   // are pure in-memory byte arrays
   ImageIO.setUseCache(false)
@@ -628,19 +628,6 @@ object Multimodal {
     }
   }
 
-  // Persisted intermediates (two-hypothesis census tables etc.)
-  // registered so long-lived sessions can release them — the Dedup
-  // ownership contract: callers run [[unpersistAll]] once results are
-  // materialized.
-  private val cachedFrames =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  private[graft] def cached(df: DataFrame): DataFrame = {
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cachedFrames.add(df)
-    df
-  }
-
   /** [[audioLandmarkCensus2]] as a PERSISTED DataFrame — the m14 shape:
     * the census feeds both hypothesis key tables AND each table is read
     * twice by the pair rule's df-cap, so without the persist every read
@@ -650,14 +637,6 @@ object Multimodal {
   def cachedCensus2(media: Dataset[MediaRow], frameLen: Int = 4,
       window: Int = 2)(implicit spark: SparkSession): DataFrame =
     cached(audioLandmarkCensus2(media, frameLen, window).toDF())
-
-  /** Release every intermediate persisted by multimodal operators in
-    * this JVM.
-    */
-  def unpersistAll(): Unit = {
-    var df = cachedFrames.poll()
-    while (df != null) { df.unpersist(blocking = false); df = cachedFrames.poll() }
-  }
 
   final case class AudioLandmarkCensus2Row(media_id: Long,
       decode_ok: Boolean, keys: Array[Long], keys_half: Array[Long])

@@ -30,30 +30,13 @@ import graft.functions.VectorOps
   *  - cosine runs on the codegen'd [[VectorOps.dot]]; pairs carry only
   *    (cid, id) beyond the filter.
   */
-object SemDedup {
+object SemDedup extends PersistRegistry {
 
-  // persisted assignment frames from clusterStats/survivorsAuto; released
-  // via [[unpersistAll]] (same ownership contract as Dedup/KMeans). The
-  // k-means assignment is reused by several branches of each entry point
-  // (size spine, survivor anti-side, both sides of the within-cluster
-  // self-join) — unpersisted, every branch would recompute the whole
-  // iterative fit (measured 20 s -> 3.5 s for q103b at bench scale).
-  private val cachedFrames =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  /** Release every assignment frame persisted by the entry points. */
-  def unpersistAll(): Unit = {
-    var df = cachedFrames.poll()
-    while (df != null) {
-      df.unpersist(blocking = false); df = cachedFrames.poll()
-    }
-  }
-
-  private def persisted(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cachedFrames.add(p)
-    p
-  }
+  // The entry points persist their k-means assignment ([[cached]]): it is
+  // reused by several branches of each entry point (size spine, survivor
+  // anti-side, both sides of the within-cluster self-join) — unpersisted,
+  // every branch would recompute the whole iterative fit (measured
+  // 20 s -> 3.5 s for q103b at bench scale).
 
   /** The gate paths' dim handling. A DERIVED dim (from [[VectorOps.dimOf]]'s
     * max-size scan) keeps the plain size filter — ragged narrower rows drop
@@ -93,7 +76,7 @@ object SemDedup {
     */
   def clusterStats(emb: DataFrame, idCol: String, vecCol: String, k: Int,
       iters: Int, minCosine: Double): DataFrame = {
-    val a = persisted(KMeans.fit(emb, idCol, vecCol, k, iters))
+    val a = cached(KMeans.fit(emb, idCol, vecCol, k, iters))
     val rem = removals(emb, idCol, vecCol, a, minCosine)
       .groupBy("cid").agg(count(lit(1)).as("n_removed"))
     a.groupBy("cid").agg(count(lit(1)).as("n"))
@@ -109,7 +92,7 @@ object SemDedup {
     */
   def survivors(emb: DataFrame, idCol: String, vecCol: String, k: Int,
       iters: Int, minCosine: Double): DataFrame = {
-    val a = persisted(KMeans.fit(emb, idCol, vecCol, k, iters))
+    val a = cached(KMeans.fit(emb, idCol, vecCol, k, iters))
     a.select("id").except(
       removals(emb, idCol, vecCol, a, minCosine).select("id"))
       .select(col("id").as(idCol))
@@ -137,7 +120,7 @@ object SemDedup {
     import org.apache.spark.sql.expressions.Window
     require(keepPct >= 0 && keepPct <= 100,
       s"keepPct must be in [0, 100], got $keepPct")
-    val a = persisted(KMeans.fit(emb, idCol, vecCol, k, iters))
+    val a = cached(KMeans.fit(emb, idCol, vecCol, k, iters))
     val surv = a.join(
       removals(emb, idCol, vecCol, a, minCosine).select("id"),
       Seq("id"), "left_anti")
@@ -298,7 +281,7 @@ object SemDedup {
       // nTables x bits hyperplane dot products per row (64 dim-wide dots
       // at the defaults) — guide §1.2, the assignment-frame rule applied
       // to the gate path. Released via [[unpersistAll]].
-      val bucketed = persisted(clean.select(col("id"),
+      val bucketed = cached(clean.select(col("id"),
           explode(array((0 until nTables).map { t =>
             struct(lit(t).as("t"), VectorOps
               .hyperplaneBucket(col("__v"), bits, t * 1000, dim).as("b"))
@@ -319,7 +302,7 @@ object SemDedup {
       return emb.select(col(idCol).as("id")).except(removed)
         .select(col("id").as(idCol))
     }
-    val a = persisted(KMeans.fit(emb, idCol, vecCol, k, iters))
+    val a = cached(KMeans.fit(emb, idCol, vecCol, k, iters))
     val cap = math.max(targetClusterSize.toLong * maxClusterFactor,
       targetClusterSize.toLong).min(Int.MaxValue).toInt
     a.select("id").except(
@@ -369,7 +352,7 @@ object SemDedup {
     // per-iteration assignment); unpersisted, every scan would recompute
     // the whole dedup stage including its pairwise self-join. Released
     // via [[unpersistAll]].
-    val survEmb = persisted(emb
+    val survEmb = cached(emb
       .select(col(idCol).as("id"), col(vecCol).as("__v"))
       .join(surv.select(col(idCol).as("id")), "id"))
     // (id, cell, dist9): the survivors' own clustering, per the paper
@@ -384,7 +367,7 @@ object SemDedup {
         // persisted: referenced by the cell-mean aggregation AND the
         // distance join side — each evaluation re-hashed and re-exploded
         // every survivor (dim rows per doc). Released via [[unpersistAll]].
-        val pts = persisted(clean
+        val pts = cached(clean
           .select(col("id"),
             VectorOps.hyperplaneBucket(col("__v"), bits, 0, dim).as("cell"),
             posexplode(col("__v")).as(Seq("pos", "xf")))

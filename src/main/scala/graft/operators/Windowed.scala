@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** Window-shaped operators from the reference's demo surface: top-k per group
   * (the `limiter` idiom), gap detection, and group-size equalization.
   */
-object Windowed {
+object Windowed extends PersistRegistry {
 
   /** Top-k rows per group (reference `limiter`,
     * `/root/reference/demos/colormap_plots.ipynb` cell 2: first-N rows per
@@ -126,17 +126,6 @@ object Windowed {
       .drop("__prev", "__new_session")
   }
 
-  // persisted intermediates from distributedCumsum; released via
-  // [[unpersistAll]] (same ownership contract as Dedup.unpersistAll)
-  private val cachedFrames =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  /** Release every intermediate distributedCumsum persisted. */
-  def unpersistAll(): Unit = {
-    var df = cachedFrames.poll()
-    while (df != null) { df.unpersist(blocking = false); df = cachedFrames.poll() }
-  }
-
   /** Exact cumulative sum of `valueCol` in global `orderCol` order WITHOUT a
     * single-partition window (the naive `Window.orderBy(key)` plan funnels
     * the whole table through one task — a non-starter at 100 TB).
@@ -161,10 +150,8 @@ object Windowed {
     require(Seq("byte", "short", "integer", "long").contains(vt.typeName),
       s"distributedCumsum needs an integral valueCol, got ${vt.simpleString}" +
         " — floor-scale to integer units first")
-    val ranged = df.repartitionByRange(nPartitions, col(orderCol))
-      .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cachedFrames.add(ranged)
+    val ranged = cached(df.repartitionByRange(nPartitions, col(orderCol))
+      .withColumn("__pid", spark_partition_id()))
     val totals = ranged.groupBy("__pid")
       .agg(sum(col(valueCol).cast("long")).as("__psum"))
     val wPrefix = Window.orderBy("__pid")
@@ -194,10 +181,8 @@ object Windowed {
     */
   def distributedLag(df: DataFrame, orderCol: String,
       nPartitions: Int = 32): DataFrame = {
-    val ranged = df.repartitionByRange(nPartitions, col(orderCol))
-      .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cachedFrames.add(ranged)
+    val ranged = cached(df.repartitionByRange(nPartitions, col(orderCol))
+      .withColumn("__pid", spark_partition_id()))
     val wPrefix = Window.orderBy("__pid")
       .rowsBetween(Window.unboundedPreceding, -1)
     // max over ALL preceding partitions (not just pid-1): robust to empty

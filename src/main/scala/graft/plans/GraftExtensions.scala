@@ -1,9 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 
 /** Engine-specific Catalyst optimizer rule, registered through
   * `SparkSessionExtensions` (the (c)-tier extension point; SURVEY §4 notes
@@ -75,4 +76,25 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => graft.sources.SeamfStreamingPrune)
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
   }
+}
+
+/** Idempotent installers for sessions built without [[GraftExtensions]]
+  * (a query or helper that needs one rule on whatever session it is
+  * handed). Each appends at most once per session, so the rules already
+  * installed keep their order and plans do not change.
+  */
+object GraftExtensions {
+  def installRule(spark: SparkSession, rule: Rule[LogicalPlan]): Unit =
+    spark.experimental.synchronized {
+      if (!spark.experimental.extraOptimizations.contains(rule))
+        spark.experimental.extraOptimizations =
+          spark.experimental.extraOptimizations :+ rule
+    }
+
+  def installStrategy(spark: SparkSession, strategy: SparkStrategy): Unit =
+    spark.experimental.synchronized {
+      if (!spark.experimental.extraStrategies.contains(strategy))
+        spark.experimental.extraStrategies =
+          spark.experimental.extraStrategies :+ strategy
+    }
 }

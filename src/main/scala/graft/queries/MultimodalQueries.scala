@@ -1028,7 +1028,7 @@ object MultimodalQueries {
         // table twice more for the df-cap). Exploding the persisted
         // census arrays yields exactly the audioLandmarkKeys tables:
         // same phase-0 kernels, same per-clip distinct. Released via
-        // Multimodal.unpersistAll (the Dedup ownership contract).
+        // Multimodal.unpersistAll (the PersistRegistry contract).
         val census = Multimodal.cachedCensus2(all)
         val half = census.select(col("media_id"),
           explode(col("keys_half")).as("k"))

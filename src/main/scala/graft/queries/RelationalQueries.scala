@@ -991,9 +991,8 @@ object RelationalQueries {
     // plans it too.
     "q46_asof_physical" -> QueryDef(
       (s, dir) => {
-        if (!s.experimental.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
-          s.experimental.extraStrategies =
-            s.experimental.extraStrategies :+ graft.plans.AsOfJoinStrategy
+        graft.plans.GraftExtensions.installStrategy(s,
+          graft.plans.AsOfJoinStrategy)
         val ev = t(s, dir, "events")
         val clicks = ev.filter(col("event_type") === "click")
           .select("event_id", "ts", "user_id")
@@ -1021,9 +1020,8 @@ object RelationalQueries {
     // advance loop stops one row sooner). Oracle replays both bounds.
     "q46b_asof_physical_tolerance" -> QueryDef(
       (s, dir) => {
-        if (!s.experimental.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
-          s.experimental.extraStrategies =
-            s.experimental.extraStrategies :+ graft.plans.AsOfJoinStrategy
+        graft.plans.GraftExtensions.installStrategy(s,
+          graft.plans.AsOfJoinStrategy)
         val ev = t(s, dir, "events")
         val clicks = ev.filter(col("event_type") === "click")
           .select("event_id", "ts", "user_id")

@@ -787,9 +787,8 @@ object LlmTextQueries {
           .withColumn("seq", Bpe.charSeq(col("word")))
         // fitWithSeqs hands back the fit's own final merged table — no
         // replay of the three merge passes. It stays persisted until the
-        // encode job has run; ownership passes to the module registry
-        // (released by the harness's per-query Bpe.unpersistAll, same
-        // contract as Dedup/Windowed caches)
+        // encode job has run; ownership passes to Bpe's registry
+        // (released by the harness's per-query drain)
         val (_, seqs) = Bpe.fitWithSeqs(words, 3)
         Bpe.track(seqs)
         val wordLens = seqs.select(col("word"),

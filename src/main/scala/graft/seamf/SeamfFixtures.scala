@@ -1,6 +1,7 @@
 package graft.seamf
 
-import java.nio.file.{Files, Path, Paths}
+import java.io.IOException
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 
@@ -414,52 +415,81 @@ object SeamfFixtures {
     out
   }
 
-  /** Idempotent shared fixture dir for inventory queries (generated once per
-    * JVM/tmp lifetime; deterministic contents).
+  /** `java.io.tmpdir/<name>`, filled by `populate` once and shared by
+    * every JVM on the host. `populate` writes a fresh temporary sibling,
+    * which is renamed into place with its `.complete` marker already
+    * inside: no reader sees a half-written directory, and two JVMs never
+    * write into the same one. A directory there without the marker (an
+    * interrupted writer's) is moved aside and deleted first. When another
+    * process publishes first, this copy is deleted and theirs is used.
     */
-  def sharedArchive(): String = {
-    val dir = Paths.get(System.getProperty("java.io.tmpdir"), "graft_seamf_fixture")
-    val marker = dir.resolve(".complete")
-    if (!Files.exists(marker)) {
-      writeArchive(dir.toString)
-      Files.write(marker, Array.emptyByteArray)
+  private[graft] def sharedDir(name: String)(populate: Path => Unit): String = {
+    val dir = Paths.get(System.getProperty("java.io.tmpdir"), name)
+    if (!isComplete(dir)) {
+      val tmp = Files.createTempDirectory(dir.getParent, s"$name.")
+      try {
+        populate(tmp)
+        Files.write(tmp.resolve(Marker), Array.emptyByteArray)
+        if (Files.exists(dir) && !isComplete(dir)) discardIncomplete(dir)
+        try Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
+        catch { case _: IOException if isComplete(dir) => () }
+      } finally deleteTree(tmp)
     }
     dir.toString
   }
 
-  /** Idempotent 200-sweep archive at the BASELINE.md reference shape
-    * (17 channels, full trace lengths, 90 s cadence) — the input behind the
-    * seamf_* bench metrics. Shared by Bench and DevRun so the dev loop
-    * times exactly the workload the bench reports.
+  private val Marker = ".complete"
+
+  private def isComplete(dir: Path): Boolean = Files.exists(dir.resolve(Marker))
+
+  // Renaming first means only one process takes the stale directory. If
+  // what it took turns out complete, another process published between
+  // the check and the rename, so it goes back.
+  private def discardIncomplete(dir: Path): Unit = {
+    val aside = Files.createTempDirectory(dir.getParent, s"${dir.getFileName}.stale.")
+    val taken = aside.resolve("dir")
+    try {
+      Files.move(dir, taken, StandardCopyOption.ATOMIC_MOVE)
+      if (isComplete(taken)) Files.move(taken, dir, StandardCopyOption.ATOMIC_MOVE)
+    } catch { case _: IOException => () }
+    finally deleteTree(aside)
+  }
+
+  private def deleteTree(root: Path): Unit =
+    if (Files.exists(root)) {
+      val paths = Files.walk(root)
+      try paths.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.deleteIfExists(p))
+      finally paths.close()
+    }
+
+  /** Shared fixture dir for inventory queries (deterministic contents). */
+  def sharedArchive(): String =
+    sharedDir("graft_seamf_fixture")(dir => writeArchive(dir.toString))
+
+  /** 200-sweep archive at the BASELINE.md reference shape (17 channels,
+    * full trace lengths, 90 s cadence) — the input behind the seamf_*
+    * bench metrics. Shared by Bench and DevRun so the dev loop times
+    * exactly the workload the bench reports.
     */
-  def sharedBenchArchive(): String = {
-    val dir = Paths.get(System.getProperty("java.io.tmpdir"), "graft_bench_archive")
-    val marker = dir.resolve(".complete")
-    if (!Files.exists(marker)) {
-      Files.createDirectories(dir)
+  def sharedBenchArchive(): String =
+    sharedDir("graft_bench_archive") { dir =>
       val shape = Shape(625, 400, 560, 151)
       val t0 = SeamfMetadata.isoToMicros("2023-09-25T00:00:00Z")
       (0 until 200).foreach { i =>
         writeSweep(dir, i, t0 + i * 90L * 1000000L, nChannels = 17,
           shape = shape)
       }
-      Files.write(marker, Array.emptyByteArray)
     }
-    dir.toString
-  }
 
-  /** Idempotent 2000-sweep archive, same per-file shape as
-    * [[sharedBenchArchive]] (VERDICT r5 #4): 10x the file count so ingest
-    * throughput is measured past page-cache warm-up and task-scheduling
-    * overhead. Generation parallelizes across cores (one-time cost,
-    * ~2 GB of XZ sweeps; deterministic per-file contents).
+  /** 2000-sweep archive, same per-file shape as [[sharedBenchArchive]]
+    * (VERDICT r5 #4): 10x the file count so ingest throughput is measured
+    * past page-cache warm-up and task-scheduling overhead. Generation
+    * parallelizes across cores (one-time cost, ~2 GB of XZ sweeps;
+    * deterministic per-file contents).
     */
-  def sharedBenchArchiveLarge(): String = {
-    val dir = Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_bench_archive_2000")
-    val marker = dir.resolve(".complete")
-    if (!Files.exists(marker)) {
-      Files.createDirectories(dir)
+  def sharedBenchArchiveLarge(): String =
+    sharedDir("graft_bench_archive_2000") { dir =>
       val shape = Shape(625, 400, 560, 151)
       val t0 = SeamfMetadata.isoToMicros("2023-09-25T00:00:00Z")
       import scala.collection.parallel.CollectionConverters._
@@ -467,19 +497,9 @@ object SeamfFixtures {
         writeSweep(dir, i, t0 + i * 90L * 1000000L, nChannels = 17,
           shape = shape)
       }
-      Files.write(marker, Array.emptyByteArray)
     }
-    dir.toString
-  }
 
-  /** Idempotent shared zip-archive fixture dir (S7 inventory queries). */
-  def sharedZipArchive(): String = {
-    val dir = Paths.get(System.getProperty("java.io.tmpdir"), "graft_seamf_zipfix")
-    val marker = dir.resolve(".complete")
-    if (!Files.exists(marker)) {
-      writeZipArchive(dir.toString)
-      Files.write(marker, Array.emptyByteArray)
-    }
-    dir.toString
-  }
+  /** Shared zip-archive fixture dir (S7 inventory queries). */
+  def sharedZipArchive(): String =
+    sharedDir("graft_seamf_zipfix")(dir => writeZipArchive(dir.toString))
 }

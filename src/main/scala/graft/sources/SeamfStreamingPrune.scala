@@ -62,8 +62,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * reader factories from the UN-pruned scan and decode every payload.
   *
   * Registered via [[graft.plans.GraftExtensions]] (production sessions) and
-  * appended to `experimental.extraOptimizations` by
-  * [[graft.streaming.StreamingOps]] (ad-hoc sessions), the same dual path as
+  * installed by [[graft.streaming.StreamingOps]] through
+  * `GraftExtensions.installRule` (ad-hoc sessions), the same dual path as
   * [[graft.plans.AsOfJoinStrategy]].
   */
 object SeamfStreamingPrune extends Rule[LogicalPlan] with PredicateHelper {

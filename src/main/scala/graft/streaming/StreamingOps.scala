@@ -1069,11 +1069,8 @@ object StreamingOps {
     // streaming scans never see V2ScanRelationPushDown — the graft rule
     // restores decode pruning for seamf streams (no-op for other sources);
     // same ad-hoc-session registration pattern as AsOfJoinStrategy
-    if (!spark.experimental.extraOptimizations
-        .contains(graft.sources.SeamfStreamingPrune))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+
-          graft.sources.SeamfStreamingPrune
+    graft.plans.GraftExtensions.installRule(spark,
+      graft.sources.SeamfStreamingPrune)
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     spark.conf.set(key, "8")

@@ -164,10 +164,7 @@ class EmptyInputSpec extends SparkSpec {
             (0 to 7).forall(i => rows.head.getLong(i) == 0L))
         case _ => assert(rows.isEmpty, s"$name: ${rows.take(3).toSeq}")
       }
-      graft.operators.Dedup.unpersistAll()
-      graft.operators.Multimodal.unpersistAll()
-      graft.operators.Windowed.unpersistAll()
-      graft.operators.LogReg.unpersistAll()
+      graft.operators.PersistRegistry.releaseAll()
     }
   }
 }

@@ -390,11 +390,8 @@ class SeamfSourceSpec extends SparkSpec {
     (0 until 3).foreach(i => SeamfFixtures.writeSweep(
       java.nio.file.Paths.get(dir), i, t0 + i * 90L * 1000000L,
       nChannels = 2))
-    if (!spark.experimental.extraOptimizations
-        .contains(graft.sources.SeamfStreamingPrune))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+
-          graft.sources.SeamfStreamingPrune
+    graft.plans.GraftExtensions.installRule(spark,
+      graft.sources.SeamfStreamingPrune)
 
     val q = spark.readStream.format("seamf").load(dir)
       .filter(col("table") === "psd")
@@ -571,11 +568,8 @@ class SeamfSourceSpec extends SparkSpec {
     (0 until 2).foreach(i => SeamfFixtures.writeSweep(
       java.nio.file.Paths.get(dir), i, t0 + i * 90L * 1000000L,
       nChannels = 3))
-    if (!spark.experimental.extraOptimizations
-        .contains(graft.sources.SeamfStreamingPrune))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+
-          graft.sources.SeamfStreamingPrune
+    graft.plans.GraftExtensions.installRule(spark,
+      graft.sources.SeamfStreamingPrune)
     // strict `>` on frequency folds as a non-strict SUPERSET prune; the
     // filter stays above the scan, so boundary rows (frequency == cut)
     // must still be dropped even though the prune admits their files.

@@ -342,6 +342,7 @@ object Bench {
         graft.seamf.SeamfLake.exportAll(spark, in, out, validate = false)
         val wall = (System.nanoTime() - t0) / 1e9
         execs("seamf_lake_export_200") = mx.snapshot("")
+        graft.seamf.SeamfFixtures.deleteTree(java.nio.file.Paths.get(out))
         wall
       }
     }

@@ -21,12 +21,13 @@ object DevRun {
     // pseudo-queries for the archive metrics (same input as Bench.scala)
     def archiveDir: String = graft.seamf.SeamfFixtures.sharedBenchArchive()
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
+    val lakeOut = java.nio.file.Files.createTempDirectory("graft_dev_lake")
     names.foreach { n =>
       val t0 = System.nanoTime()
       n match {
         case "lake_export" =>
-          val out = java.nio.file.Files.createTempDirectory("graft_dev_lake").toString
-          graft.seamf.SeamfLake.exportAll(spark, archiveDir, out, validate = false)
+          graft.seamf.SeamfLake.exportAll(spark, archiveDir, lakeOut.toString,
+            validate = false)
         case "ingest" =>
           graft.seamf.SeamfReader.traces(spark, archiveDir)
             .write.format("noop").mode("overwrite").save()
@@ -60,6 +61,7 @@ object DevRun {
             .write.format("noop").mode("overwrite").save()
       }
       println(f"$n%-30s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
+      graft.seamf.SeamfFixtures.deleteTree(lakeOut)
       graft.operators.PersistRegistry.releaseAll()
     }
     spark.stop()

@@ -344,10 +344,11 @@ object ScaleBench {
           spark.read.format("seamf").load(dir)
             .write.format("noop").mode("overwrite").save()
         }
-        def export(dir: String): Double = timed {
-          val out = java.nio.file.Files
-            .createTempDirectory("graft_scale_lake").toString
-          graft.seamf.SeamfLake.exportAll(spark, dir, out, validate = false)
+        def export(dir: String): Double = {
+          val out = java.nio.file.Files.createTempDirectory("graft_scale_lake")
+          try timed {
+            graft.seamf.SeamfLake.exportAll(spark, dir, out.toString, validate = false)
+          } finally graft.seamf.SeamfFixtures.deleteTree(out)
         }
         // each metric's first run in a JVM pays whole-stage codegen (~1 s
         // for ingest, ~2x for the 7-sink export plan) — without a warm-up

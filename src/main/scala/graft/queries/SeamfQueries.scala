@@ -99,6 +99,20 @@ object SeamfQueries {
         ON p.datetime_us = c.datetime_us AND p.frequency = c.frequency
       ORDER BY 1, 2"""
 
+  /** s16/s24: the prune window as a filter over a trace frame, then a
+    * per-(frequency, statistic) summary of the surviving psd traces.
+    */
+  private def pruneWindowSummary(tr: DataFrame): DataFrame =
+    tr.filter(col("table") === "psd" && col("datetime_us") <= PruneCutUs &&
+        col("frequency") <= PruneMaxFreq)
+      .groupBy("frequency", "capture_statistic")
+      .agg(count(lit(1)).as("n_traces"),
+        sum(size(col("trace"))).as("n_points"),
+        max(array_max(col("trace"))).as("max_db"),
+        min(col("datetime_us")).as("min_dt"),
+        max(col("datetime_us")).as("max_dt"))
+      .orderBy("frequency", "capture_statistic")
+
   private val S16OracleSql =
     s"""SELECT frequency, capture_statistic,
           COUNT(DISTINCT datetime_us) AS n_traces, COUNT(*) AS n_points,
@@ -486,29 +500,19 @@ object SeamfQueries {
             || '#' || detector) AS n_traces
         FROM ${rp("pvt")} GROUP BY 1, 2 ORDER BY 1, 2""")),
 
-    // ---- S3 stretch: decode-time predicate pruning (VERDICT r5 #7) -----
-    // tracesPruned evaluates a (table, time-range, frequency-band)
-    // predicate against parsed METADATA: the 4 fixture sweeps outside the
-    // 5-minute window skip XZ decompression entirely (accumulator-counted;
-    // SeamfSpec asserts the counts), and within decoded files only the psd
-    // slots of the two in-band channels are sliced. The oracle applies the
-    // SAME predicate as a WHERE clause over the full-decode dump, so a
-    // hash match proves pruned-decode ≡ decode-then-filter.
+    // ---- S3 stretch: decode-then-filter side of decode-time pruning ----
+    // The full `binaryFile` decode (SeamfReader.traces) with the prune
+    // window applied as an ordinary filter AFTER every file is decoded:
+    // the reference semantics of the (table, time-range, frequency-band)
+    // predicate. s24 runs the same predicate and aggregation through the
+    // connector, where it pushes into the scan and the fixture sweeps
+    // outside the window skip XZ decompression. The oracle applies the
+    // predicate as a WHERE clause over the full-decode dump and grades
+    // both, so two hash matches prove pruned-decode ≡ decode-then-filter.
     "s16_seamf_pruned_decode" -> QueryDef(
       (s, _) => {
         SeamfDump.ensure(s) // oracle reads the dump of the same fixture
-        val pruned = SeamfReader.tracesPruned(s, fixture(),
-          SeamfReader.TracePrune(tables = Some(Set("psd")),
-            maxDatetimeUs = Some(PruneCutUs),
-            maxFrequency = Some(PruneMaxFreq)))
-        pruned.toDF()
-          .groupBy("frequency", "capture_statistic")
-          .agg(count(lit(1)).as("n_traces"),
-            sum(size(col("trace"))).as("n_points"),
-            max(array_max(col("trace"))).as("max_db"),
-            min(col("datetime_us")).as("min_dt"),
-            max(col("datetime_us")).as("max_dt"))
-          .orderBy("frequency", "capture_statistic")
+        pruneWindowSummary(SeamfReader.traces(s, fixture()).toDF())
       },
       Some(S16OracleSql)),
 
@@ -706,25 +710,15 @@ object SeamfQueries {
       Some(S02OracleSql)),
 
     // ---- s16 THROUGH the connector (VERDICT r8 #2) ----------------------
-    // The pruned-decode analytic where ALL THREE predicates push: `table`
+    // The pruned side of s16: ALL THREE predicates push — `table`
     // membership, the inclusive datetime bound, and the inclusive
     // frequency bound fold exactly into the scan's TracePrune, so sweeps
     // outside the window never decompress — and the s16 oracle proves
-    // pruned-decode ≡ decode-then-filter on the connector path too.
+    // pruned-decode ≡ decode-then-filter.
     "s24_seamf_dsv2_pruned_decode" -> QueryDef(
       (s, _) => {
         SeamfDump.ensure(s)
-        s.read.format("seamf").load(fixture())
-          .filter(col("table") === "psd" &&
-            col("datetime_us") <= PruneCutUs &&
-            col("frequency") <= PruneMaxFreq)
-          .groupBy("frequency", "capture_statistic")
-          .agg(count(lit(1)).as("n_traces"),
-            sum(size(col("trace"))).as("n_points"),
-            max(array_max(col("trace"))).as("max_db"),
-            min(col("datetime_us")).as("min_dt"),
-            max(col("datetime_us")).as("max_dt"))
-          .orderBy("frequency", "capture_statistic")
+        pruneWindowSummary(s.read.format("seamf").load(fixture()))
       },
       Some(S16OracleSql)),
 

@@ -26,7 +26,7 @@ object LlmDedupQueries {
     * punctuation AT the same position, which real sf-dir layouts never
     * do).
     */
-  private[queries] def artifactKey(dir: String): String =
+  private[graft] def artifactKey(dir: String): String =
     dir.replaceAll("[^A-Za-z0-9._-]", "_")
 
   val defs: ListMap[String, QueryDef] = ListMap(

@@ -405,13 +405,14 @@ object SeamfFixtures {
     Files.createDirectories(dir)
     val t0 = SeamfMetadata.isoToMicros("2023-09-21T00:00:00Z")
     val tmp = Files.createTempDirectory("graft_zip_members")
-    val members = (0 until nFiles).map { i =>
+    val members = try (0 until nFiles).map { i =>
       val p = writeSweep(tmp, i, t0 + i * 90L * 1000000L, nChannels,
         corruptSha = i == nFiles - 1)
       (p.getFileName.toString, Files.readAllBytes(p))
-    } :+ (("README.txt", "not sigmf".getBytes))
+    } finally deleteTree(tmp)
     val out = dir.resolve(zipName)
-    Files.write(out, SeamfCodec.packZip(members))
+    Files.write(out,
+      SeamfCodec.packZip(members :+ (("README.txt", "not sigmf".getBytes))))
     out
   }
 
@@ -455,7 +456,8 @@ object SeamfFixtures {
     finally deleteTree(aside)
   }
 
-  private def deleteTree(root: Path): Unit =
+  /** Delete `root` and everything under it, if it exists. */
+  private[graft] def deleteTree(root: Path): Unit =
     if (Files.exists(root)) {
       val paths = Files.walk(root)
       try paths.sorted(java.util.Comparator.reverseOrder[Path]())

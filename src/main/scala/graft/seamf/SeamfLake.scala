@@ -68,7 +68,7 @@ object SeamfLake {
         Seq("datetime", "frequency"))
 
       val sinks: Seq[(String, DataFrame)] =
-        Seq("psd", "pvt", "pfp", "apd").map(n => n -> longifyFromTraces(traces, n)) ++
+        SeamfReader.traceProducts(traces).toSeq ++
           Seq("channel_metadata" -> cm, "sweep_metadata" -> sm,
             "capture_summary" -> capSummary)
       // dedicated pool sized to the sink count: each task blocks on a Spark
@@ -96,32 +96,6 @@ object SeamfLake {
       } finally pool.shutdown()
     } finally {
       traces.unpersist()
-    }
-  }
-
-  // Same long-format projection as SeamfReader.tables, but over an already
-  // materialized trace DataFrame (so the scan is shared across sinks).
-  private[graft] def longifyFromTraces(tr: DataFrame, table: String): DataFrame = {
-    val base = tr.filter(col("table") === table)
-      .withColumn("datetime", timestamp_micros(col("datetime_us")))
-    val exploded = base.select(
-      col("file"), col("datetime"), col("frequency"),
-      col("capture_statistic"), col("detector"),
-      posexplode(col("trace")).as(Seq("pos", "value")),
-      col("axis_start"), col("axis_step"))
-      .withColumn("axis", col("axis_start") + col("pos") * col("axis_step"))
-    table match {
-      case "psd" => exploded.select(col("file"), col("datetime"), col("frequency"),
-        col("capture_statistic"), col("axis").as("baseband_hz"),
-        col("value").as("psd_dbm_per_hz"))
-      case "pvt" => exploded.select(col("file"), col("datetime"), col("frequency"),
-        col("detector"), col("axis").as("elapsed_s"), col("value").as("power_dbm"))
-      case "pfp" => exploded.select(col("file"), col("datetime"), col("frequency"),
-        col("capture_statistic"), col("detector"), col("axis").as("frame_s"),
-        col("value").as("power_dbm"))
-      case "apd" => exploded.select(col("file"), col("datetime"), col("frequency"),
-        col("axis").as("amplitude_dbm"), col("value").as("probability_pct"))
-      case other => throw new IllegalArgumentException(s"unknown table $other")
     }
   }
 }

@@ -1,7 +1,7 @@
 package graft.seamf
 
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
@@ -80,12 +80,10 @@ object SeamfReader {
     */
   def decodeFile(path: String, bytes: Array[Byte], tz: Option[String],
       decodePayload: Boolean, checkHash: Boolean): Decoded = {
-    decoded(SeamfDecode.decode(path, bytes, tz, TracePrune(), decodePayload,
-      checkHash))
-  }
-
-  private def decoded(f: SeamfDecode.File): Decoded =
+    val f = SeamfDecode.decode(path, bytes, tz, TracePrune(), decodePayload,
+      checkHash)
     Decoded(traceRows(f), channelRows(f), sweepRow(f))
+  }
 
   private def traceRows(f: SeamfDecode.File): Seq[TraceRow] =
     if (f.payload == null) Nil
@@ -123,12 +121,10 @@ object SeamfReader {
     *               reference errors= semantics (ziparchive.py:381-440).
     * @param decodePayload false = metadata-only fast path (`read_seamf_meta`,
     *               seamf.py:1073-1103): the XZ payload is never touched.
-    * @param counters decode-work counters for a pruned scan.
     */
   private def decodeAs[T: org.apache.spark.sql.Encoder](
       spark: SparkSession, path: String, tz: Option[String], errors: String,
-      decodePayload: Boolean, checkHash: Boolean,
-      prune: TracePrune = TracePrune(), counters: Option[PruneCounters] = None)(
+      decodePayload: Boolean, checkHash: Boolean)(
       project: SeamfDecode.File => IterableOnce[T]): Dataset[T] = {
     import spark.implicits._
     val failed: LongAccumulator = spark.sparkContext.longAccumulator("seamf.failed_files")
@@ -144,16 +140,8 @@ object SeamfReader {
       .mapPartitions { it =>
         it.flatMap { case (p, bytes) =>
           try {
-            val f = SeamfDecode.decode(p, bytes, tz, prune, decodePayload,
-              checkHash)
-            counters.foreach { c =>
-              if (f.keep.isEmpty) c.prunedFiles.add(1)
-              else {
-                c.decodedFiles.add(1)
-                c.prunedTraces.add(f.meta.slots.size - f.keep.size)
-              }
-            }
-            project(f)
+            project(SeamfDecode.decode(p, bytes, tz, TracePrune(),
+              decodePayload, checkHash))
           } catch {
             case _: Exception if !raise =>
               failed.add(1)
@@ -163,11 +151,12 @@ object SeamfReader {
       }
   }
 
-  /** Metadata-evaluable decode predicate for [[tracesPruned]]: every field
-    * is testable from the parsed metadata JSON ALONE — capture datetimes,
-    * capture frequencies, and the slot table names all live in the tar's
-    * metadata member — so a non-matching file is rejected before its XZ
-    * payload is ever decompressed (the decode-dominant cost,
+  /** Metadata-evaluable decode predicate for the `format("seamf")`
+    * connector's filter pushdown ([[graft.sources.SeamfSource]]): every
+    * field is testable from the parsed metadata JSON ALONE — capture
+    * datetimes, capture frequencies, and the slot table names all live in
+    * the tar's metadata member — so a non-matching file is rejected before
+    * its XZ payload is ever decompressed (the decode-dominant cost,
     * seamf.py:1038-1040). `None` = no constraint.
     */
   final case class TracePrune(
@@ -184,52 +173,8 @@ object SeamfReader {
     def matchesTable(table: String): Boolean = tables.forall(_.contains(table))
   }
 
-  /** Decode-work counters for one [[tracesPruned]] scan: files whose XZ
-    * payload was never decompressed, trace slots skipped within decoded
-    * files, and files fully decoded. Read them on the driver AFTER an
-    * action on the returned Dataset.
-    *
-    * BEST-EFFORT contract: the counters are incremented inside a
-    * transformation (`mapPartitions`), so Spark only guarantees
-    * exactly-once updates for tasks that succeed on the first attempt —
-    * stage retries and speculative execution can inflate them. They are
-    * observability telemetry (skip-rate dashboards), not query results;
-    * anything correctness-bearing must come from the Dataset itself
-    * (s16 hash-grades the pruned rows, not the counters).
-    */
-  final case class PruneCounters(prunedFiles: LongAccumulator,
-      prunedTraces: LongAccumulator, decodedFiles: LongAccumulator)
-
-  /** [[traces]] with decode-time pruning (VERDICT r5 #7): the predicate is
-    * evaluated against parsed METADATA before the payload is touched.
-    * A file none of whose (table, capture) slots match skips XZ
-    * decompression entirely — at archive scale the time/frequency window
-    * of a typical analytic keeps a small fraction of files, so the
-    * CPU-bound decode cost drops proportionally, not just the row count.
-    * Within a decoded file only matching slots are sliced and emitted
-    * (one XZ stream per file — partial decompression is not possible, so
-    * slot pruning saves allocation + downstream width, not XZ time).
-    *
-    * Result rows are EXACTLY `traces(...).filter(predicate)` — the pruned
-    * scan is a pushdown, not a different semantics; s16 hash-grades that
-    * equivalence against the full-decode dump.
-    */
-  def tracesPrunedCounted(spark: SparkSession, path: String, prune: TracePrune,
-      tz: Option[String] = None, errors: String = "log")
-      : (Dataset[TraceRow], PruneCounters) = {
-    import spark.implicits._
-    val counters = PruneCounters(
-      spark.sparkContext.longAccumulator("seamf.pruned_files"),
-      spark.sparkContext.longAccumulator("seamf.pruned_traces"),
-      spark.sparkContext.longAccumulator("seamf.decoded_files"))
-    (decodeAs[TraceRow](spark, path, tz, errors, decodePayload = true,
-      checkHash = true, prune, Some(counters))(traceRows), counters)
-  }
-
-  /** [[tracesPrunedCounted]] without the counters (query surface). */
-  def tracesPruned(spark: SparkSession, path: String, prune: TracePrune,
-      tz: Option[String] = None, errors: String = "log"): Dataset[TraceRow] =
-    tracesPrunedCounted(spark, path, prune, tz, errors)._1
+  /** Zip members per input split of [[tracesFromZips]]. */
+  private val MembersPerSplit = 8
 
   /** Decode zip archives of .sigmf members (S7: the reference's primary
     * input container, ziparchive.py:365-447) with MEMBER-level parallelism:
@@ -245,8 +190,7 @@ object SeamfReader {
     * GETs — the split/decode pipeline is unchanged.
     */
   def tracesFromZips(spark: SparkSession, path: String,
-      tz: Option[String] = None, errors: String = "log",
-      membersPerSplit: Int = 8): Dataset[TraceRow] = {
+      tz: Option[String] = None, errors: String = "log"): Dataset[TraceRow] = {
     import spark.implicits._
     val failed = spark.sparkContext.longAccumulator("seamf.failed_files")
     val raise = errors == "raise"
@@ -267,7 +211,7 @@ object SeamfReader {
       }
     }
     val nSplits = math.max(1,
-      math.min(members.size / math.max(membersPerSplit, 1),
+      math.min(members.size / MembersPerSplit,
         spark.sparkContext.defaultParallelism * 2))
     spark.createDataset(members)
       .repartition(math.max(nSplits, 2)) // >=2: one archive must still fan out
@@ -294,15 +238,6 @@ object SeamfReader {
       }
   }
 
-  /** Whole-file decode (tests / ad-hoc use). */
-  def decode(spark: SparkSession, path: String, tz: Option[String] = None,
-      errors: String = "log", decodePayload: Boolean = true,
-      checkHash: Boolean = true): Dataset[Decoded] = {
-    import spark.implicits._
-    decodeAs[Decoded](spark, path, tz, errors, decodePayload, checkHash)(f =>
-      Seq(decoded(f)))
-  }
-
   def traces(spark: SparkSession, path: String, tz: Option[String] = None,
       errors: String = "log"): Dataset[TraceRow] = {
     import spark.implicits._
@@ -327,29 +262,29 @@ object SeamfReader {
       decodePayload = false, checkHash = checkHash)(f => Seq(sweepRow(f))).toDF()
   }
 
-  private def longify(tr: DataFrame, table: String): DataFrame = {
-    val base = tr.filter(col("table") === table)
-      .withColumn("datetime", timestamp_micros(col("datetime_us")))
-    val exploded = base.select(
-      col("file"), col("datetime"), col("frequency"),
-      col("capture_statistic"), col("detector"),
-      posexplode(col("trace")).as(Seq("pos", "value")),
-      col("axis_start"), col("axis_step"))
-      .withColumn("axis", col("axis_start") + col("pos") * col("axis_step"))
-    table match {
-      case "psd" => exploded.select(col("file"), col("datetime"), col("frequency"),
-        col("capture_statistic"), col("axis").as("baseband_hz"),
-        col("value").as("psd_dbm_per_hz"))
-      case "pvt" => exploded.select(col("file"), col("datetime"), col("frequency"),
-        col("detector"), col("axis").as("elapsed_s"),
-        col("value").as("power_dbm"))
-      case "pfp" => exploded.select(col("file"), col("datetime"), col("frequency"),
-        col("capture_statistic"), col("detector"), col("axis").as("frame_s"),
-        col("value").as("power_dbm"))
-      case "apd" => exploded.select(col("file"), col("datetime"), col("frequency"),
-        col("axis").as("amplitude_dbm"), col("value").as("probability_pct"))
-      case other => throw new IllegalArgumentException(s"unknown table $other")
-    }
+  /** The four trace products in long format (FIXTURES §A.4) over one
+    * trace frame: what [[tables]] returns and what [[SeamfLake.exportAll]]
+    * writes from its persisted scan. The apd table unions the v4+
+    * axis-based form with the v2/v3 zipped two-trace form.
+    */
+  private[graft] def traceProducts(tr: DataFrame): Map[String, DataFrame] = {
+    def long(table: String, value: Column*): DataFrame =
+      tr.filter(col("table") === table)
+        .select(col("file"), timestamp_micros(col("datetime_us")).as("datetime"),
+          col("frequency"), col("capture_statistic"), col("detector"),
+          posexplode(col("trace")).as(Seq("pos", "value")),
+          col("axis_start"), col("axis_step"))
+        .withColumn("axis", col("axis_start") + col("pos") * col("axis_step"))
+        .select(Seq(col("file"), col("datetime"), col("frequency")) ++ value: _*)
+    Map(
+      "psd" -> long("psd", col("capture_statistic"), col("axis").as("baseband_hz"),
+        col("value").as("psd_dbm_per_hz")),
+      "pvt" -> long("pvt", col("detector"), col("axis").as("elapsed_s"),
+        col("value").as("power_dbm")),
+      "pfp" -> long("pfp", col("capture_statistic"), col("detector"),
+        col("axis").as("frame_s"), col("value").as("power_dbm")),
+      "apd" -> long("apd", col("axis").as("amplitude_dbm"),
+        col("value").as("probability_pct")).unionByName(legacyApd(tr)))
   }
 
   /** Legacy (v2/v3) APD: probability-percentile and amplitude traces zipped
@@ -378,18 +313,11 @@ object SeamfReader {
     * seamf.py:159-232) in long format: psd / pvt / pfp / apd +
     * channel_metadata + sweep_metadata. The trace scan is shared: callers
     * doing several products should `.persist()` the trace Dataset
-    * (SURVEY S13 shared-scan). The apd table unions the v4+ axis-based form
-    * with the v2/v3 zipped two-trace form.
+    * (SURVEY S13 shared-scan), as [[SeamfLake.exportAll]] does.
     */
   def tables(spark: SparkSession, path: String, tz: Option[String] = None,
-      errors: String = "log"): Map[String, DataFrame] = {
-    val tr = traces(spark, path, tz, errors).toDF()
-    Map(
-      "psd" -> longify(tr, "psd"),
-      "pvt" -> longify(tr, "pvt"),
-      "pfp" -> longify(tr, "pfp"),
-      "apd" -> longify(tr, "apd").unionByName(legacyApd(tr)),
+      errors: String = "log"): Map[String, DataFrame] =
+    traceProducts(traces(spark, path, tz, errors).toDF()) ++ Map(
       "channel_metadata" -> channelMetadata(spark, path, tz, errors),
       "sweep_metadata" -> sweepMetadata(spark, path, tz, errors, checkHash = true))
-  }
 }

@@ -22,9 +22,10 @@ import graft.seamf.{SeamfDecode, SeamfMetadata, SeamfReader}
 
 /** DataSource V2 seamf trace source: `spark.read.format("seamf").load(dir)`.
   *
-  * The `mapPartitions` ingest ([[graft.seamf.SeamfReader]]) is the library
-  * surface; this source puts the same decode kernel
-  * ([[graft.seamf.SeamfDecode]]) on Spark's connector API so the optimizer —
+  * The `mapPartitions` ingest ([[graft.seamf.SeamfReader]]) is the full-
+  * decode reference this source is graded against; this source puts the
+  * same decode kernel ([[graft.seamf.SeamfDecode]]) on Spark's connector
+  * API and is the one place decode-time pruning lives: the optimizer —
   * not the caller — decides how much of each archive member to decode:
   *
   *   - '''Column pruning is decode pruning.''' The XZ payload exists only to
@@ -68,8 +69,9 @@ import graft.seamf.{SeamfDecode, SeamfMetadata, SeamfReader}
   *     are few).
   *   - '''Observability via DSv2 custom metrics.''' skipped / metadata-
   *     pruned / decoded file counts surface as SQL metrics on the scan node
-  *     (exactly-once per SQL metric semantics — stronger than the
-  *     best-effort accumulators of `tracesPrunedCounted`).
+  *     (`seamfSkippedFiles`, `seamfPrunedFiles`, `seamfMetaOnlyFiles`,
+  *     `seamfDecodedFiles`) with exactly-once SQL metric semantics — the
+  *     one place decode-time pruning is counted.
   *   - '''Partial limit pushdown.''' `SupportsPushDownLimit`: a pushed
   *     LIMIT caps each partition's decode at `limit` surviving rows —
   *     files after the cutoff in a packed bin are never opened. Spark

@@ -15,8 +15,8 @@ class BenchMetricsSpec extends SparkSpec {
 
     // same data + schema written to two different /tmp locations must hash
     // identically (seamf fixture archives land in fresh temp dirs each run)
-    val d1 = java.nio.file.Files.createTempDirectory("graft_ph_a").toString
-    val d2 = java.nio.file.Files.createTempDirectory("graft_ph_b").toString
+    val d1 = tempDir("graft_ph_a")
+    val d2 = tempDir("graft_ph_b")
     df1.write.mode("overwrite").parquet(d1)
     df1.write.mode("overwrite").parquet(d2)
     val h1 = BenchMetrics.planHash(spark.read.parquet(d1).filter(col("x") > 4))

@@ -14,7 +14,7 @@ class EmptyInputSpec extends SparkSpec {
 
   // an empty mirror of the fixture lake: same schemas, zero rows
   private lazy val emptyDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_empty").toString
+    val dir = tempDir("graft_empty")
     // events is TIMESTAMP(NANOS); read it as raw longs like Tables.load does
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     Seq("region", "nation", "customer", "supplier", "part", "orders",

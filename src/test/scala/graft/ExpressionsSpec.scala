@@ -30,7 +30,7 @@ class ExpressionsSpec extends SparkSpec {
   test("expressions stay inside whole-stage codegen") {
     // a parquet scan keeps the input non-literal (a literal input would be
     // constant-folded into a LocalTableScan before codegen)
-    val dir = java.nio.file.Files.createTempDirectory("exprtest").toString
+    val dir = tempDir("exprtest")
     Seq(Tuple1(payload)).toDF("content").write.mode("overwrite")
       .parquet(s"$dir/p")
     val df = spark.read.parquet(s"$dir/p")
@@ -81,7 +81,7 @@ class ExpressionsSpec extends SparkSpec {
     }
     // stays inside whole-stage codegen (parquet-backed so the local
     // relation doesn't constant-fold the projection away)
-    val dir = java.nio.file.Files.createTempDirectory("dottest").toString
+    val dir = tempDir("dottest")
     df.write.mode("overwrite").parquet(s"$dir/p")
     val plan = spark.read.parquet(s"$dir/p")
       .select(dotProduct(col("a"), col("b")))
@@ -134,7 +134,7 @@ class ExpressionsSpec extends SparkSpec {
       Seq(1).toDF("t").select(TextOps.shingles(col("t"), 3)).head()
     }
     // stays inside whole-stage codegen on a parquet-backed scan
-    val dir = java.nio.file.Files.createTempDirectory("shingletest").toString
+    val dir = tempDir("shingletest")
     df.write.mode("overwrite").parquet(s"$dir/p")
     val plan = spark.read.parquet(s"$dir/p")
       .select(TextOps.shingles(col("t"), 3))

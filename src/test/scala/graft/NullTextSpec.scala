@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
 class NullTextSpec extends SparkSpec {
 
   private lazy val nullDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_nulltext").toString
+    val dir = tempDir("graft_nulltext")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "embeddings").foreach { t =>

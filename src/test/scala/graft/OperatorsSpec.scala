@@ -75,7 +75,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("CorpusExport.writeShards: stable membership, balanced dirs, pre-shuffled order") {
     val docs = Tables.load(spark, sf("sf0.001"), "documents")
-    val out = java.nio.file.Files.createTempDirectory("graft_shards").toString
+    val out = tempDir("graft_shards")
     CorpusExport.writeShards(docs, "doc_id", out, nShards = 4)
     val back = spark.read.parquet(out)
     assert(back.count() === docs.count())

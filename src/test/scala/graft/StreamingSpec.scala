@@ -151,8 +151,7 @@ class StreamingSpec extends SparkSpec {
     // travel through a parquet round trip, so a saturated artifact
     // RELOADED from disk must still refuse where it matters — at the
     // probe (recomputed popcount, so a doctored fill_ratio cannot mask)
-    val satDir = java.nio.file.Files
-      .createTempDirectory("graft_sat_idx").toString
+    val satDir = tempDir("graft_sat_idx")
     idx.withColumn("filter", transform(col("filter"), _ => lit(-1L)))
       .write.mode("overwrite").parquet(satDir)
     val exReload = intercept[Exception] {

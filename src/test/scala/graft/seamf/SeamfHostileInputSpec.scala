@@ -42,7 +42,7 @@ class SeamfHostileInputSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   private def landing(prefix: String, hostile: Array[Byte]): String = {
-    val dir = Files.createTempDirectory(prefix)
+    val dir = java.nio.file.Paths.get(tempDir(prefix))
     SeamfFixtures.writeSweep(dir, 0, t0, nChannels)
     Files.write(dir.resolve("synthetic_sweep_00001.sigmf"), hostile)
     dir.toString

@@ -1,15 +1,14 @@
 package graft.seamf
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 class SeamfLakeSpec extends SparkSpec {
 
   test("exportAll writes date-partitioned zstd parquet for every product") {
-    val landing = Files.createTempDirectory("graft_lake_in").toString
+    val landing = tempDir("graft_lake_in")
     SeamfFixtures.writeArchive(landing, nFiles = 6, nChannels = 2)
-    val out = Files.createTempDirectory("graft_lake_out").toString
+    val out = tempDir("graft_lake_out")
     val counts = SeamfLake.exportAll(spark, landing, out)
 
     // 5 good files (1 corrupt sha): psd rows = 5 files x 2 ch x 2 stats x len

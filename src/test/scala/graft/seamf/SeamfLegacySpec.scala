@@ -1,6 +1,5 @@
 package graft.seamf
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -16,7 +15,7 @@ class SeamfLegacySpec extends SparkSpec {
   private val shape = SeamfFixtures.LegacyShape()
 
   private def legacyDir(gen: Int, nFiles: Int = 3): String = {
-    val d = Files.createTempDirectory(s"graft_legacy_v$gen").toString
+    val d = tempDir(s"graft_legacy_v$gen")
     val t0 = SeamfMetadata.isoToMicros("2022-11-01T00:00:00Z")
     (0 until nFiles).foreach(i =>
       SeamfFixtures.writeLegacySweep(java.nio.file.Paths.get(d), gen,
@@ -84,6 +83,17 @@ class SeamfLegacySpec extends SparkSpec {
       HalfFloat.fromFloat(SeamfFixtures.sampleValue(0, 10, s)) & 0xffff)).toSet
     assert(amps === expAmps)
     assert(probs === expProbs)
+  }
+
+  test("exportAll writes the same v2/v3 APD rows that tables() returns") {
+    for (dir <- Seq(dirV2, dirV3)) {
+      val out = tempDir("graft_legacy_export")
+      val counts = SeamfLake.exportAll(spark, dir, out, tz = Some("UTC"))
+      assert(counts("apd") === 3L * (25 + 28))
+      val want = SeamfReader.tables(spark, dir, tz = Some("UTC"))("apd")
+      val written = spark.read.parquet(s"$out/apd").select(want.columns.map(col): _*)
+      assert(written.exceptAll(want).isEmpty && want.exceptAll(written).isEmpty)
+    }
   }
 
   test("capture-attached channel metadata (flat keys and v1 annotations)") {

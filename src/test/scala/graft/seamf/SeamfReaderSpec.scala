@@ -1,6 +1,7 @@
 package graft.seamf
 
-import java.nio.file.Files
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -8,7 +9,7 @@ class SeamfReaderSpec extends SparkSpec {
   private lazy val shape = SeamfFixtures.Shape()
   // 8 files, 1 corrupt sha -> 7 good; 3 channels each
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft_seamf_test").toString
+    val d = tempDir("graft_seamf_test")
     SeamfFixtures.writeArchive(d, nFiles = 8, nChannels = 3, shape)
     d
   }
@@ -36,7 +37,7 @@ class SeamfReaderSpec extends SparkSpec {
       .select("file").distinct().count()
     assert(okFiles === 7)
     val ex = intercept[org.apache.spark.SparkException] {
-      SeamfReader.decode(spark, dir, errors = "raise").count()
+      SeamfReader.traces(spark, dir, errors = "raise").count()
     }
     assert(ex.getMessage.contains("sha512") ||
       Option(ex.getCause).exists(_.getMessage.contains("sha512")))
@@ -72,7 +73,7 @@ class SeamfReaderSpec extends SparkSpec {
   }
 
   test("multi-archive union: comma-separated landing dirs scan as one source") {
-    val d2 = Files.createTempDirectory("graft_seamf_second").toString
+    val d2 = tempDir("graft_seamf_second")
     SeamfFixtures.writeSweep(java.nio.file.Paths.get(d2), 99,
       SeamfMetadata.isoToMicros("2023-09-22T00:00:00Z"), nChannels = 2)
     val union = SeamfReader.sweepMetadata(spark, s"$dir,$d2", checkHash = true)
@@ -80,7 +81,7 @@ class SeamfReaderSpec extends SparkSpec {
   }
 
   test("zip-archive scan decodes .sigmf members, skips corrupt + non-sigmf") {
-    val zdir = Files.createTempDirectory("graft_zip_test").toString
+    val zdir = tempDir("graft_zip_test")
     SeamfFixtures.writeZipArchive(zdir, nFiles = 4, nChannels = 2)
     val tr = SeamfReader.tracesFromZips(spark, zdir)
     // 3 good members (1 corrupt sha) x 2 channels x 11 traces
@@ -90,9 +91,9 @@ class SeamfReaderSpec extends SparkSpec {
   }
 
   test("one multi-member zip fans out across >1 task (member-level splits)") {
-    val zdir = Files.createTempDirectory("graft_zip_split").toString
+    val zdir = tempDir("graft_zip_split")
     SeamfFixtures.writeZipArchive(zdir, nFiles = 8, nChannels = 2)
-    val tr = SeamfReader.tracesFromZips(spark, zdir, membersPerSplit = 2)
+    val tr = SeamfReader.tracesFromZips(spark, zdir)
     // partition ids are assigned by the member-split repartition and are
     // still visible after the decode mapPartitions (no shuffle in between)
     val partsPerZip = tr.toDF()
@@ -116,41 +117,42 @@ class SeamfReaderSpec extends SparkSpec {
   }
 
   test("pruned decode equals decode-then-filter and skips out-of-window XZ work") {
+    // the pruned decode runs in the seamf connector: the filters below push
+    // into its scan as a DecodePrune, applied before any payload decode
     val cut = SeamfMetadata.isoToMicros("2023-09-21T00:05:00Z") // slots 0-3
-    val prune = SeamfReader.TracePrune(tables = Some(Set("psd")),
-      maxDatetimeUs = Some(cut), maxFrequency = Some(3.566e9))
-    val (ds, counters) = SeamfReader.tracesPrunedCounted(spark, dir, prune)
+    val pruned = spark.read.format("seamf").load(dir)
+      .filter(col("datetime_us") <= cut && col("frequency") <= 3.566e9 &&
+        col("table") === "psd")
+    import spark.implicits._
+    val ds = pruned.as[SeamfReader.TraceRow]
     val got = ds.collect()
-    val full = SeamfReader.traces(spark, dir).collect()
-    val want = full.filter(r => r.table == "psd" && r.datetime_us <= cut &&
-      r.frequency <= 3.566e9)
-    def key(r: SeamfReader.TraceRow) =
-      (r.file, r.datetime_us, r.frequency, r.capture_statistic)
-    assert(got.map(key).toSet === want.map(key).toSet)
+    val want = SeamfReader.traces(spark, dir).collect().filter(r =>
+      r.table == "psd" && r.datetime_us <= cut && r.frequency <= 3.566e9)
     assert(got.nonEmpty && got.length === want.length)
     // decoded values identical, not just keys
-    val gotByKey = got.map(r => key(r) -> r.trace.toSeq).toMap
-    assert(want.forall(r => gotByKey(key(r)) == r.trace.toSeq))
+    def exact(rows: Array[SeamfReader.TraceRow]) =
+      rows.map(r => (r.copy(trace = null), r.trace.toSeq)).toSet
+    assert(exact(got) === exact(want))
     // files at slots 5, 6, 8 are outside the window and skip XZ entirely
-    // (the corrupt-sha file, also out-of-window, fails before pruning and
-    // lands in failed_files instead)
-    assert(counters.prunedFiles.value === 3)
-    assert(counters.decodedFiles.value === 4)
-    // within decoded files, only the psd slots of the 2 in-band channels
-    // survive; everything else is slot-pruned
-    val decodedFiles = got.map(_.file).toSet
-    val slotsInDecoded = full.count(r => decodedFiles.contains(r.file))
-    assert(counters.prunedTraces.value === (slotsInDecoded - got.length).toLong)
+    // (the corrupt-sha file, also out-of-window, fails its hash check
+    // before pruning and is counted as skipped instead)
+    val plan = ds.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val scan = plan.collectFirst { case b: BatchScanExec => b }
+      .getOrElse(fail(s"no BatchScanExec in:\n$plan"))
+    assert(scan.metrics("seamfPrunedFiles").value === 3)
+    assert(scan.metrics("seamfDecodedFiles").value === 4)
+    assert(scan.metrics("seamfSkippedFiles").value === 1)
   }
 
   test("empty landing dir decodes to zero rows, not an error") {
-    val empty = Files.createTempDirectory("graft_seamf_empty").toString
+    val empty = tempDir("graft_seamf_empty")
     assert(SeamfReader.traces(spark, empty).count() === 0L)
-    assert(SeamfReader.tracesPruned(spark, empty,
-      SeamfReader.TracePrune(tables = Some(Set("psd")))).count() === 0L)
     assert(SeamfReader.sweepMetadata(spark, empty).count() === 0L)
     assert(SeamfReader.channelMetadata(spark, empty).count() === 0L)
-    val emptyZip = Files.createTempDirectory("graft_zip_empty").toString
+    val emptyZip = tempDir("graft_zip_empty")
     assert(SeamfReader.tracesFromZips(spark, emptyZip).count() === 0L)
   }
 }

@@ -82,6 +82,7 @@ class SeamfSourceSpec extends SparkSpec {
     assert(planStr.contains(s"datetime_us <= $cut"), planStr)
     assert(planStr.contains("table IN {psd}"), planStr)
     // ... and in the metrics: later files are rejected from metadata alone
+    // (exact counts and trace values: SeamfReaderSpec's pruned-decode test)
     val scan = runAndScan(filtered)
     assert(metric(scan, "seamfPrunedFiles") > 0)
     // exactness: identical to the unpushed filter over the full scan
@@ -168,8 +169,7 @@ class SeamfSourceSpec extends SparkSpec {
     val keep = dts.take(2).toSet
     // the build side must be a real filtered SCAN (a LocalRelation's
     // filter constant-folds away and DPP sees no selective predicate)
-    val dimPath = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft_dpp_dim").toString
+    val dimPath = tempDir("graft_dpp_dim")
     dts.toSeq.toDF("dt")
       .withColumn("tag", when(col("dt").isInCollection(keep), "keep")
         .otherwise("drop"))
@@ -294,8 +294,7 @@ class SeamfSourceSpec extends SparkSpec {
 
   test("an empty landing directory scans as an empty frame (a fresh lake " +
       "is not an error)") {
-    val empty = java.nio.file.Files
-      .createTempDirectory("graft_seamf_empty").toString
+    val empty = tempDir("graft_seamf_empty")
     val df = spark.read.format("seamf").load(empty)
     assert(df.count() === 0)
     assert(df.schema === graft.sources.SeamfSource.TraceSchema)
@@ -313,8 +312,7 @@ class SeamfSourceSpec extends SparkSpec {
   test("readStream.format(\"seamf\"): file-arrival micro-batches decode " +
       "incrementally, and the final table equals the batch scan " +
       "(VERDICT r8 #4)") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_dsv2_stream_landing").toString
+    val dir = tempDir("graft_dsv2_stream_landing")
     val t0 = SeamfMetadata.isoToMicros("2023-09-21T00:00:00Z")
     (0 until 3).foreach(i => SeamfFixtures.writeSweep(
       java.nio.file.Paths.get(dir), i, t0 + i * 90L * 1000000L,
@@ -342,8 +340,7 @@ class SeamfSourceSpec extends SparkSpec {
 
   test("maxFilesPerTrigger bounds each micro-batch (admission control): " +
       "a 4-file backlog drains in 4 one-file batches") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_dsv2_stream_throttle").toString
+    val dir = tempDir("graft_dsv2_stream_throttle")
     val t0 = SeamfMetadata.isoToMicros("2023-09-21T00:00:00Z")
     (0 until 4).foreach(i => SeamfFixtures.writeSweep(
       java.nio.file.Paths.get(dir), i, t0 + i * 90L * 1000000L,
@@ -364,8 +361,7 @@ class SeamfSourceSpec extends SparkSpec {
 
   test("Trigger.AvailableNow drains the backlog in throttled batches and " +
       "terminates — the catch-up-then-stop production shape") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_dsv2_stream_availnow").toString
+    val dir = tempDir("graft_dsv2_stream_availnow")
     val t0 = SeamfMetadata.isoToMicros("2023-09-21T00:00:00Z")
     (0 until 3).foreach(i => SeamfFixtures.writeSweep(
       java.nio.file.Paths.get(dir), i, t0 + i * 90L * 1000000L,
@@ -384,8 +380,7 @@ class SeamfSourceSpec extends SparkSpec {
   test("streaming decode pruning (SeamfStreamingPrune): a metadata-only " +
       "streaming aggregation never decodes payloads, and prunable " +
       "predicates fold into the scan's decode prune") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_dsv2_stream_prune").toString
+    val dir = tempDir("graft_dsv2_stream_prune")
     val t0 = SeamfMetadata.isoToMicros("2023-09-21T00:00:00Z")
     (0 until 3).foreach(i => SeamfFixtures.writeSweep(
       java.nio.file.Paths.get(dir), i, t0 + i * 90L * 1000000L,
@@ -462,17 +457,14 @@ class SeamfSourceSpec extends SparkSpec {
 
   test("checkpoint recovery: a restarted stream resumes from the " +
       "committed watermark offset and decodes only the new arrivals") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_dsv2_stream_ckpt").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_dsv2_stream_ckpt_loc").toString
+    val dir = tempDir("graft_dsv2_stream_ckpt")
+    val ckpt = tempDir("graft_dsv2_stream_ckpt_loc")
     val t0 = SeamfMetadata.isoToMicros("2023-09-21T00:00:00Z")
     (0 until 2).foreach(i => SeamfFixtures.writeSweep(
       java.nio.file.Paths.get(dir), i, t0 + i * 90L * 1000000L,
       nChannels = 2))
 
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_dsv2_stream_ckpt_out").toString
+    val out = tempDir("graft_dsv2_stream_ckpt_out")
 
     def drain(): Long = {
       val q = spark.readStream.format("seamf")
@@ -511,12 +503,9 @@ class SeamfSourceSpec extends SparkSpec {
   test("watermark offsets: an equal-mtime burst sorting after the " +
       "watermark streams correctly; a late file below it fails LOUDLY " +
       "(a count-based offset would silently re-decode and drop)") {
-    val dirP = java.nio.file.Files
-      .createTempDirectory("graft_dsv2_stream_tie")
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_dsv2_stream_tie_ckpt").toString
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_dsv2_stream_tie_out").toString
+    val dirP = java.nio.file.Paths.get(tempDir("graft_dsv2_stream_tie"))
+    val ckpt = tempDir("graft_dsv2_stream_tie_ckpt")
+    val out = tempDir("graft_dsv2_stream_tie_out")
     val t0 = SeamfMetadata.isoToMicros("2023-09-21T00:00:00Z")
     val tie = java.nio.file.attribute.FileTime.fromMillis(1700000000000L)
 
@@ -562,8 +551,7 @@ class SeamfSourceSpec extends SparkSpec {
 
   test("streaming decode pruning with a strict double bound: the superset " +
       "fold skips files while the residual filter keeps semantics exact") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_dsv2_stream_prune_strict").toString
+    val dir = tempDir("graft_dsv2_stream_prune_strict")
     val t0 = SeamfMetadata.isoToMicros("2023-09-21T00:00:00Z")
     (0 until 2).foreach(i => SeamfFixtures.writeSweep(
       java.nio.file.Paths.get(dir), i, t0 + i * 90L * 1000000L,

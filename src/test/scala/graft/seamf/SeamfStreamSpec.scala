@@ -1,12 +1,12 @@
 package graft.seamf
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 import graft.SparkSpec
 
 class SeamfStreamSpec extends SparkSpec {
 
   test("streaming ingest decodes arrivals incrementally") {
-    val dir = Files.createTempDirectory("graft_stream_landing").toString
+    val dir = tempDir("graft_stream_landing")
     val t0 = SeamfMetadata.isoToMicros("2023-09-21T00:00:00Z")
     (0 until 3).foreach(i => SeamfFixtures.writeSweep(Paths.get(dir), i,
       t0 + i * 90L * 1000000L, nChannels = 2))
@@ -27,12 +27,12 @@ class SeamfStreamSpec extends SparkSpec {
   }
 
   test("checkpointed streaming append into the date-partitioned lake") {
-    val dir = Files.createTempDirectory("graft_stream_lake_in").toString
+    val dir = tempDir("graft_stream_lake_in")
     val t0 = SeamfMetadata.isoToMicros("2023-09-21T00:00:00Z")
     (0 until 2).foreach(i => SeamfFixtures.writeSweep(Paths.get(dir), i,
       t0 + i * 90L * 1000000L, nChannels = 2))
-    val out = Files.createTempDirectory("graft_stream_lake_out").toString
-    val ckpt = Files.createTempDirectory("graft_stream_ckpt").toString
+    val out = tempDir("graft_stream_lake_out")
+    val ckpt = tempDir("graft_stream_ckpt")
 
     val q = spark.readStream.format("seamf").load(dir)
       .withColumn("date", org.apache.spark.sql.functions.to_date(
@@ -52,7 +52,7 @@ class SeamfStreamSpec extends SparkSpec {
   }
 
   test("streaming capture summary aggregates with bounded state") {
-    val dir = Files.createTempDirectory("graft_stream_landing2").toString
+    val dir = tempDir("graft_stream_landing2")
     val t0 = SeamfMetadata.isoToMicros("2023-09-21T00:00:00Z")
     (0 until 2).foreach(i => SeamfFixtures.writeSweep(Paths.get(dir), i,
       t0 + i * 90L * 1000000L, nChannels = 2))

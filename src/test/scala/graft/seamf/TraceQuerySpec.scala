@@ -1,12 +1,11 @@
 package graft.seamf
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 class TraceQuerySpec extends SparkSpec {
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft_tq").toString
+    val d = tempDir("graft_tq")
     SeamfFixtures.writeArchive(d, nFiles = 4, nChannels = 2)
     d
   }
@@ -37,7 +36,7 @@ class TraceQuerySpec extends SparkSpec {
   }
 
   test("readTimeRange prunes lake partitions by day") {
-    val out = Files.createTempDirectory("graft_tq_lake").toString
+    val out = tempDir("graft_tq_lake")
     SeamfLake.exportAll(spark, dir, out)
     val pruned = TraceQuery.readTimeRange(spark, out, "psd",
       "2023-09-21", "2023-09-21")

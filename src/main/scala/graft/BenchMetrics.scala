@@ -121,7 +121,7 @@ object BenchMetrics {
       loadEnd > math.max(2.0 * loadStart, cpus / 4.0)
 
   /** Fingerprint of the canonicalized (exprId-normalized) physical plan.
-    * Temp-dir paths (seamf fixture archives are created under java.io.tmpdir
+    * Paths under `java.io.tmpdir` (seamf fixture archives are created there
     * with a random suffix each bench run) are masked so the hash is stable
     * across runs of the same code; under AQE this is the INITIAL plan, i.e.
     * the code-determined shape, which is exactly what a round-over-round
@@ -129,7 +129,9 @@ object BenchMetrics {
     */
   def planHash(df: DataFrame): String = {
     val canon = df.queryExecution.executedPlan.canonicalized.toString
-    val masked = canon.replaceAll("/tmp/[^\\s,\\)\\]]*", "<tmp>")
+    val tmp = java.util.regex.Pattern.quote(
+      System.getProperty("java.io.tmpdir").stripSuffix("/"))
+    val masked = canon.replaceAll(tmp + "/[^\\s,\\)\\]]*", "<tmp>")
     val md = java.security.MessageDigest.getInstance("MD5")
     md.digest(masked.getBytes("UTF-8")).map("%02x".format(_))
       .mkString.take(12)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: time individual inventory queries by name.
   *
   * {{{ sbt "runMain graft.DevRun q47_winnow_fingerprints q25_jaccard_pairs" }}}
@@ -11,12 +9,7 @@ import org.apache.spark.sql.SparkSession
 object DevRun {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // pseudo-queries for the archive metrics (same input as Bench.scala)
     def archiveDir: String = graft.seamf.SeamfFixtures.sharedBenchArchive()

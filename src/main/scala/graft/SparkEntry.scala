@@ -4,7 +4,7 @@ import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.queries.{LlmQueries, MultimodalQueries, QueryDef, RelationalQueries, SeamfQueries, StreamQueries}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * `queries` is the operator inventory (SURVEY.md §2): each entry is one
   * implemented operator exercised over the `/root/testdata` fixture tables;

@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** Salted equi-join for skewed keys.
   *
-  * AQE's skew-join handling (`spark.sql.adaptive.skewJoin.enabled`) is the
-  * first line of defense and needs no code; this helper is the explicit
-  * fallback for pathologies AQE can't split (e.g. one key that is 50% of the
-  * build side, or aggregation-before-join pipelines). Mechanism: the large
+  * AQE's skew-join handling (on by Spark's default) is the first line of
+  * defense and needs no code; this helper is the explicit fallback for
+  * pathologies AQE can't split (e.g. one key that is 50% of the build side,
+  * or aggregation-before-join pipelines). Mechanism: the large
   * side gets a deterministic salt in [0, nSalts) derived by hashing its
   * non-key columns; the small(er) side is exploded nSalts times; the join
   * key becomes (key, salt), splitting each hot key's rows across nSalts

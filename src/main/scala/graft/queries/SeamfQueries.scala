@@ -99,6 +99,68 @@ object SeamfQueries {
         ON p.datetime_us = c.datetime_us AND p.frequency = c.frequency
       ORDER BY 1, 2"""
 
+  /** s01/s22: per-(frequency, statistic) exact dB mean, min and max over
+    * long PSD points (`frequency`, `capture_statistic`, `psd_dbm_per_hz`).
+    */
+  private def psdSummary(points: DataFrame): DataFrame = {
+    val w = Window.partitionBy("frequency", "capture_statistic")
+    points
+      .withColumn("__vmax", max(col("psd_dbm_per_hz")).over(w))
+      .withColumn("__lin", lin(col("psd_dbm_per_hz"), col("__vmax")))
+      .groupBy("frequency", "capture_statistic")
+      .agg(count(lit(1)).as("n"),
+        dbMeanAgg(col("__vmax"), col("__lin")).as("db_mean"),
+        min(col("psd_dbm_per_hz")).as("db_min"),
+        max(col("psd_dbm_per_hz")).as("db_max"))
+      .orderBy("frequency", "capture_statistic")
+  }
+
+  /** s02/s23: capture_summary over long PVT points (`datetime_us`,
+    * `frequency`, `detector`, `power_dbm`) — peak/rms max and exact dB mean
+    * pivoted per capture, joined to the cal metadata dump, plus F2 (kTB
+    * noise floor) and F8 (overload -> {-1, 1} categorical map,
+    * colormap_plots.ipynb cell 5).
+    */
+  private def captureSummary(pvtPoints: DataFrame, s: SparkSession)
+      : DataFrame = {
+    val w = Window.partitionBy("datetime_us", "frequency", "detector")
+    val agg = pvtPoints
+      .withColumn("__vmax", max(col("power_dbm")).over(w))
+      .withColumn("__lin", lin(col("power_dbm"), col("__vmax")))
+      .groupBy("datetime_us", "frequency", "detector")
+      .agg(max(col("power_dbm")).as("peak_power"),
+        dbMeanAgg(col("__vmax"), col("__lin")).as("mean_power"))
+    val piv = agg.groupBy("datetime_us", "frequency")
+      .pivot("detector", Seq("peak", "rms"))
+      .agg(first(col("peak_power")).as("max"), first(col("mean_power")).as("mean"))
+    val cal = dump(s, "channel_metadata")
+      .select(col("datetime_us"), col("frequency"), col("overload"),
+        col("cal_noise_figure_dB"), col("cal_gain_dB"),
+        col("cal_temperature_degC"))
+    piv.join(cal, Seq("datetime_us", "frequency"))
+      // kTB thermal noise floor (F2, seamf_quickplot.ipynb cell 5)
+      .withColumn("noise_floor_dbm_per_hz",
+        round(graft.functions.DbMath.ktbNoiseFloorDbmPerHz(
+          col("cal_temperature_degC"), col("cal_noise_figure_dB")), 6))
+      .withColumn("overload_sign", when(col("overload"), -1).otherwise(1))
+      .orderBy("datetime_us", "frequency")
+  }
+
+  /** s15/s25: the fixture streamed through
+    * `SeamfStream.captureSummaryStream` into the memory sink `memName`, with
+    * window starts as epoch micros.
+    */
+  private def streamedCaptureSummary(s: SparkSession, memName: String)
+      : DataFrame = {
+    SeamfDump.ensure(s) // oracle reads the dump of the same fixture
+    graft.streaming.StreamingOps.runToMemory(s,
+        graft.seamf.SeamfStream.captureSummaryStream(s, fixture()),
+        memName, outputMode = "complete")
+      .select(unix_micros(col("minute")).as("minute_us"),
+        col("frequency"), col("peak_dbm"), col("n_traces"))
+      .orderBy("minute_us", "frequency")
+  }
+
   /** s16/s24: the prune window as a filter over a trace frame, then a
     * per-(frequency, statistic) summary of the surviving psd traces.
     */
@@ -113,6 +175,17 @@ object SeamfQueries {
         max(col("datetime_us")).as("max_dt"))
       .orderBy("frequency", "capture_statistic")
 
+  // s15/s25: the streamed 1-minute capture windows recomputed batch-side
+  // from the decoded dump.
+  private val S15OracleSql =
+    s"""SELECT
+          CAST(FLOOR(datetime_us / 60000000) AS BIGINT) * 60000000
+            AS minute_us,
+          frequency, MAX(power_dbm) AS peak_dbm,
+          COUNT(DISTINCT file_name || '#' || CAST(datetime_us AS VARCHAR)
+            || '#' || detector) AS n_traces
+        FROM ${rp("pvt")} GROUP BY 1, 2 ORDER BY 1, 2"""
+
   private val S16OracleSql =
     s"""SELECT frequency, capture_statistic,
           COUNT(DISTINCT datetime_us) AS n_traces, COUNT(*) AS n_points,
@@ -126,48 +199,12 @@ object SeamfQueries {
 
     // ---- S1/S5/S6: full decode -> long PSD table + A1-style agg --------
     "s01_seamf_psd_summary" -> QueryDef(
-      (s, _) => {
-        val w = Window.partitionBy("frequency", "capture_statistic")
-        dump(s, "psd")
-          .withColumn("__vmax", max(col("psd_dbm_per_hz")).over(w))
-          .withColumn("__lin", lin(col("psd_dbm_per_hz"), col("__vmax")))
-          .groupBy("frequency", "capture_statistic")
-          .agg(count(lit(1)).as("n"),
-            dbMeanAgg(col("__vmax"), col("__lin")).as("db_mean"),
-            min(col("psd_dbm_per_hz")).as("db_min"),
-            max(col("psd_dbm_per_hz")).as("db_max"))
-          .orderBy("frequency", "capture_statistic")
-      },
+      (s, _) => psdSummary(dump(s, "psd")),
       Some(S01OracleSql)),
 
     // ---- A8/J1: capture_summary (dask_processing.ipynb cell 3) ---------
-    // Includes F2 (kTB noise floor) and F8 (overload -> {-1, 1} categorical
-    // map, colormap_plots.ipynb cell 5).
     "s02_seamf_capture_summary" -> QueryDef(
-      (s, _) => {
-        val w = Window.partitionBy("datetime_us", "frequency", "detector")
-        val agg = dump(s, "pvt")
-          .withColumn("__vmax", max(col("power_dbm")).over(w))
-          .withColumn("__lin", lin(col("power_dbm"), col("__vmax")))
-          .groupBy("datetime_us", "frequency", "detector")
-          .agg(max(col("power_dbm")).as("peak_power"),
-            dbMeanAgg(col("__vmax"), col("__lin")).as("mean_power"))
-        val piv = agg.groupBy("datetime_us", "frequency")
-          .pivot("detector", Seq("peak", "rms"))
-          .agg(first(col("peak_power")).as("max"), first(col("mean_power")).as("mean"))
-        val cal = dump(s, "channel_metadata")
-          .select(col("datetime_us"), col("frequency"), col("overload"),
-            col("cal_noise_figure_dB"), col("cal_gain_dB"),
-            col("cal_temperature_degC"))
-        piv.join(cal, Seq("datetime_us", "frequency"))
-          // kTB thermal noise floor (F2, seamf_quickplot.ipynb cell 5)
-          .withColumn("noise_floor_dbm_per_hz",
-            round(graft.functions.DbMath.ktbNoiseFloorDbmPerHz(
-              col("cal_temperature_degC"), col("cal_noise_figure_dB")), 6))
-          // F8: overload boolean -> {-1, 1} (colormap_plots.ipynb cell 5)
-          .withColumn("overload_sign", when(col("overload"), -1).otherwise(1))
-          .orderBy("datetime_us", "frequency")
-      },
+      (s, _) => captureSummary(dump(s, "pvt"), s),
       Some(S02OracleSql)),
 
     // ---- S3: metadata-only scan ----------------------------------------
@@ -483,22 +520,8 @@ object SeamfQueries {
     // the decoded dump: streaming-vs-batch parity for the seamf pipeline
     // itself, not just the events fixture.
     "s15_seamf_stream_summary" -> QueryDef(
-      (s, _) => {
-        SeamfDump.ensure(s) // oracle reads the dump of the same fixture
-        val streamed = graft.streaming.StreamingOps.runToMemory(s,
-          graft.seamf.SeamfStream.captureSummaryStream(s, fixture()),
-          "s15_mem", outputMode = "complete")
-        streamed.select(unix_micros(col("minute")).as("minute_us"),
-            col("frequency"), col("peak_dbm"), col("n_traces"))
-          .orderBy("minute_us", "frequency")
-      },
-      Some(s"""SELECT
-          CAST(FLOOR(datetime_us / 60000000) AS BIGINT) * 60000000
-            AS minute_us,
-          frequency, MAX(power_dbm) AS peak_dbm,
-          COUNT(DISTINCT file_name || '#' || CAST(datetime_us AS VARCHAR)
-            || '#' || detector) AS n_traces
-        FROM ${rp("pvt")} GROUP BY 1, 2 ORDER BY 1, 2""")),
+      (s, _) => streamedCaptureSummary(s, "s15_mem"),
+      Some(S15OracleSql)),
 
     // ---- S3 stretch: decode-then-filter side of decode-time pruning ----
     // The full `binaryFile` decode (SeamfReader.traces) with the prune
@@ -660,19 +683,10 @@ object SeamfQueries {
     "s22_seamf_dsv2_psd_summary" -> QueryDef(
       (s, _) => {
         SeamfDump.ensure(s)
-        val w = Window.partitionBy("frequency", "capture_statistic")
-        s.read.format("seamf").load(fixture())
+        psdSummary(s.read.format("seamf").load(fixture())
           .filter(col("table") === "psd")
           .select(col("frequency"), col("capture_statistic"),
-            explode(col("trace")).as("psd_dbm_per_hz"))
-          .withColumn("__vmax", max(col("psd_dbm_per_hz")).over(w))
-          .withColumn("__lin", lin(col("psd_dbm_per_hz"), col("__vmax")))
-          .groupBy("frequency", "capture_statistic")
-          .agg(count(lit(1)).as("n"),
-            dbMeanAgg(col("__vmax"), col("__lin")).as("db_mean"),
-            min(col("psd_dbm_per_hz")).as("db_min"),
-            max(col("psd_dbm_per_hz")).as("db_max"))
-          .orderBy("frequency", "capture_statistic")
+            explode(col("trace")).as("psd_dbm_per_hz")))
       },
       Some(S01OracleSql)),
 
@@ -683,29 +697,10 @@ object SeamfQueries {
     "s23_seamf_dsv2_capture_summary" -> QueryDef(
       (s, _) => {
         SeamfDump.ensure(s)
-        val w = Window.partitionBy("datetime_us", "frequency", "detector")
-        val agg = s.read.format("seamf").load(fixture())
+        captureSummary(s.read.format("seamf").load(fixture())
           .filter(col("table") === "pvt")
           .select(col("datetime_us"), col("frequency"), col("detector"),
-            explode(col("trace")).as("power_dbm"))
-          .withColumn("__vmax", max(col("power_dbm")).over(w))
-          .withColumn("__lin", lin(col("power_dbm"), col("__vmax")))
-          .groupBy("datetime_us", "frequency", "detector")
-          .agg(max(col("power_dbm")).as("peak_power"),
-            dbMeanAgg(col("__vmax"), col("__lin")).as("mean_power"))
-        val piv = agg.groupBy("datetime_us", "frequency")
-          .pivot("detector", Seq("peak", "rms"))
-          .agg(first(col("peak_power")).as("max"), first(col("mean_power")).as("mean"))
-        val cal = dump(s, "channel_metadata")
-          .select(col("datetime_us"), col("frequency"), col("overload"),
-            col("cal_noise_figure_dB"), col("cal_gain_dB"),
-            col("cal_temperature_degC"))
-        piv.join(cal, Seq("datetime_us", "frequency"))
-          .withColumn("noise_floor_dbm_per_hz",
-            round(graft.functions.DbMath.ktbNoiseFloorDbmPerHz(
-              col("cal_temperature_degC"), col("cal_noise_figure_dB")), 6))
-          .withColumn("overload_sign", when(col("overload"), -1).otherwise(1))
-          .orderBy("datetime_us", "frequency")
+            explode(col("trace")).as("power_dbm")), s)
       },
       Some(S02OracleSql)),
 
@@ -725,35 +720,12 @@ object SeamfQueries {
     // ---- s15 THROUGH the connector (VERDICT r8 #4) ----------------------
     // readStream.format("seamf"): the connector's MicroBatchStream treats
     // the landing dir's file arrivals (90 s schedule cadence) as offsets —
-    // one long per checkpoint, zip members expanded per batch — feeding
-    // the same watermarked 1-minute capture summary as s15. The oracle
-    // recomputes the windows batch-side from the decoded dump, so this is
-    // streaming-vs-batch parity for the CONNECTOR ingest path.
+    // one long per checkpoint, zip members expanded per batch. s15 reads
+    // through the same connector (SeamfStream.captureSummaryStream), so
+    // both names run one body, graded by the one s15 oracle.
     "s25_seamf_dsv2_stream" -> QueryDef(
-      (s, _) => {
-        SeamfDump.ensure(s)
-        val summary = s.readStream.format("seamf").load(fixture())
-          .filter(col("table") === "pvt")
-          .withColumn("datetime", timestamp_micros(col("datetime_us")))
-          .withWatermark("datetime", "10 minutes")
-          .groupBy(window(col("datetime"), "1 minute"), col("frequency"))
-          .agg(max(array_max(col("trace"))).as("peak_dbm"),
-            count(lit(1)).as("n_traces"))
-          .select(col("window.start").as("minute"), col("frequency"),
-            col("peak_dbm"), col("n_traces"))
-        graft.streaming.StreamingOps.runToMemory(s, summary,
-            "s25_mem", outputMode = "complete")
-          .select(unix_micros(col("minute")).as("minute_us"),
-            col("frequency"), col("peak_dbm"), col("n_traces"))
-          .orderBy("minute_us", "frequency")
-      },
-      Some(s"""SELECT
-          CAST(FLOOR(datetime_us / 60000000) AS BIGINT) * 60000000
-            AS minute_us,
-          frequency, MAX(power_dbm) AS peak_dbm,
-          COUNT(DISTINCT file_name || '#' || CAST(datetime_us AS VARCHAR)
-            || '#' || detector) AS n_traces
-        FROM ${rp("pvt")} GROUP BY 1, 2 ORDER BY 1, 2""")),
+      (s, _) => streamedCaptureSummary(s, "s25_mem"),
+      Some(S15OracleSql)),
 
     // ---- streaming decode pruning (SeamfStreamingPrune) ----------------
     // The same metadata inventory as s20, but STREAMED: Spark never runs

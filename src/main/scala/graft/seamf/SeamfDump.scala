@@ -18,8 +18,12 @@ import org.apache.spark.sql.functions._
   */
 object SeamfDump {
 
-  /** Absolute dump root — referenced verbatim inside oracle SQL strings. */
-  val root = "/root/repo/target/seamf_dump"
+  /** Absolute dump root under the running checkout's `target/` —
+    * referenced verbatim inside oracle SQL strings, so two copies of the
+    * repo never write or grade one directory.
+    */
+  val root: String = java.nio.file.Paths.get(sys.props("user.dir"), "target",
+    "seamf_dump").toAbsolutePath.toString
 
   @volatile private var written = false
 

@@ -14,12 +14,8 @@ class AsOfJoinPhysicalSpec extends AnyFunSuite {
   private lazy val ext: SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-asof-exec")
+    GraftSession.builder("local[4]", 4)
       .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
   }
 

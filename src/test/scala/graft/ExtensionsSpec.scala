@@ -80,15 +80,27 @@ class ExtensionsSpec extends SparkSpec {
     }
   }
 
+  test("the shared test session is vanilla and carries " +
+    "GraftSession.builder's settings") {
+    // no GraftExtensions: the round-trip survives optimization, as it does
+    // on the driver's and perfbench's sessions
+    val df = spark.range(1, 4)
+      .select(DbMath.dbToPow(DbMath.powToDb(col("id").cast("double"))).as("y"))
+    val opt = df.queryExecution.optimizedPlan.toString
+    assert(opt.contains("LOG10"), opt)
+    assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
+    assert(spark.conf.get("spark.sql.parquet.outputTimestampType") ===
+      "TIMESTAMP_MICROS")
+    assert(spark.conf.get("spark.ui.enabled") === "false")
+    assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
+  }
+
   test("extension injection wires the rule into a session's optimizer") {
     // a session created with GraftExtensions optimizes the round-trip away
     org.apache.spark.sql.SparkSession.clearActiveSession()
     org.apache.spark.sql.SparkSession.clearDefaultSession()
-    val ext = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
+    val ext = GraftSession.builder("local[2]", 2)
       .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     try {
       import ext.implicits._

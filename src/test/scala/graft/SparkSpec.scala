@@ -16,13 +16,7 @@ import graft.seamf.SeamfFixtures
   * getOrCreate; suites must not stop() it).
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder("local[4]", 4).getOrCreate()
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 

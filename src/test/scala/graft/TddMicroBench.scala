@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Micro-bench for the W4 TDD-correlation UDF (VERDICT r7 #6): is the
@@ -32,11 +31,7 @@ object TddMicroBench {
       graft.operators.TddSync.correlate(t, graft.operators.TddSync.defaultTemplates(n)))
     val kernelSec = (System.nanoTime() - t0) / 1e9
 
-    val spark = SparkSession.builder().master("local[1]")
-      .appName("tdd-microbench")
-      .config("spark.sql.shuffle.partitions", "1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("local[1]", 1).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     val df = traces.toSeq.map(_.toSeq).toDF("trace")
